@@ -27,49 +27,6 @@ from cdc_pubsub_spark.registry import REGISTRY  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# SURVEY.md §2.B declared operators that still lack a driver-certified row —
-# these lead the queries() ordering so the driver's per-round correctness
-# window (first ~50 entries, in order) certifies the declared surface first.
-_SURVEY_PRIORITY = [
-    "topk_per_group",
-    "sort_multikey_limit",
-    "topk_global",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "fn_string",
-    "fn_regex",
-    "fn_date",
-    "fn_math",
-    "fn_conditional",
-    "fn_array",
-    "fn_map_json",
-    "cdc_parse_envelope",
-    "cdc_route_path",
-    "cdc_upsert_materialize",
-    "udf_python_scalar",
-    "udf_pandas_scalar",
-    "udf_pandas_grouped_agg",
-    "udf_grouped_map",
-    "udtf_explode_like",
-    "dedup_exact",
-    "dedup_near",
-    "sim_cosine_topk",
-    "knn_majority_label",
-    "text_token_counts",
-    "text_lang_stats",
-    "stream_file_source",
-    "stream_tumbling",
-    "stream_sliding",
-    "stream_session",
-    "stream_dedup",
-    "stream_late_data",
-    "stream_stateful",
-    "stream_stream_join",
-    "sink_pubsub_emulated",
-]
-
 
 def _certification_state() -> tuple[set[str], dict[str, int], dict[str, int]]:
     """(certified ops, attempts, latest round) from CORRECTNESS_r*.json.
@@ -118,21 +75,13 @@ def _certification_state() -> tuple[set[str], dict[str, int], dict[str, int]]:
     return done, attempts, cert_round
 
 
-# Ops whose implementation or oracle CHANGED this round: their accumulated
-# certification predates the change, so they jump the certified tail until a
-# CORRECTNESS round has hash-checked the new contract. Round 14's planned
-# window: 37 never-sampled r13 wave ops (released from the defer set below,
-# they lead via rest_new) + the recertifies below + stalest-r04 tail slots
-# (~12 with a 50-slot window) — counts derived from
-# len(CORRECTNESS never-sampled) at session open, not hand-tracked.
+# Ops whose implementation or oracle changed since their last green
+# CORRECTNESS row: they jump the certified tail until a CORRECTNESS round
+# has hash-checked the new contract. Keep the list short (≲10 per round)
+# so most of the driver's ~50-slot window re-verifies the stalest tail.
 _RECERTIFY: list[str] = [
-    # r16 OPTIMIZATION-round rewrites (OPTIMIZATION_r16.md per-op log;
-    # every one re-verified MATCH vs its oracle at sf0.001/0.01/0.1
-    # before commit, plus a full 492-query driver-sim per commit batch).
-    # The r15 wave (13 ops) landed green in CORRECTNESS_r15 and rotated
-    # out; this wave is 6 ops — within the ≲10/round guideline (r15
-    # ADVICE item 1) — so ~40+ window slots flow to the stalest
-    # certified tail (r15 VERDICT item 8).
+    # r16 rewrites (OPTIMIZATION_r16.md per-op log), each re-verified
+    # MATCH vs its oracle at sf0.001/0.01/0.1 before commit.
     "ts_pettitt_changepoint",  # lazy return — no caches to truncate
     "ml_conformal_interval",  # one (split, rq) cell pass off the cache
     "graph_rich_club",  # degree relation checkpointed once
@@ -142,76 +91,31 @@ _RECERTIFY: list[str] = [
     "ml_permutation_importance_ols",  # per-row products BIGINT, acc wide
 ]
 
-# New ops added THIS round that should be pushed to the END of the ordering
-# (used when the window is already full of higher-priority slots). The r12
-# EXTENSION session's ops land here: the planned r12 window (33 growth ops
-# + 13 r03 + 4 oldest-r04 stalest) is already sized to exactly 50 slots,
-# so post-close additions defer and lead the r13 window instead (the r09
-# extension precedent).
-#
-# ROLLING RECERTIFICATION POLICY from r12 onward (round-10 VERDICT item 3):
-# with never-sampled at zero, every ~50-slot window is _RECERTIFY entries
-# (changed ops, keep ≲10 per round — large change waves should be split
-# across rounds) followed by the certified tail stalest-first. 378 ops /
-# ~40 stale slots per round ≈ a full registry sweep every ~9 rounds, and
-# no op's latest green row ages past that. The mechanism is already the
-# ordering below (lead + recert + rest_new + certified-stalest-first);
-# the policy is the budget discipline on _RECERTIFY's size and the
-# registry freeze-until-drained rule.
-_DEFER_TO_NEXT_ROUND: set[str] = {
-    # r15 growth defers here if the window fills (the r12/r14 precedent).
-}
-# r15 session-open: graph_stress_sample (the r14 post-close extension, the
-# registry's only never-sampled op) was released from the defer set — it
-# leads the r15 window via rest_new (r14 VERDICT item 1).
-# r14 session-open: the 37 r13 wave ops deferred here last round were
-# released — with CORRECTNESS_r13 ingested (50/50 green) they are the only
-# never-sampled ops and lead the r14 window via rest_new automatically
-# (the r12/r13 precedent). Growth this round defers here (above).
-# r13 session-open: the 36 r12-EXTENSION ops deferred here last round are
-# released — with CORRECTNESS_r12 ingested they are the only never-sampled
-# ops, so they lead the r13 window via rest_new automatically (the r12
-# window itself landed exactly as queued: 50/50 green). The 3 staged r13
-# promotions (ts_matrix_profile, ml_shapley_linear2,
-# agg_moment_rollup_mergeable) join rest_new behind them in registration
-# order; the remaining ~11 slots recertify the stalest r04 rows.
-
 
 def _ordered_names() -> list[str]:
+    """Window order: recertify, then never-certified, then the certified
+    tail stalest-first."""
     done, attempts, cert_round = _certification_state()
     names = list(REGISTRY)
-    lead = [n for n in _SURVEY_PRIORITY if n in REGISTRY and n not in done]
-    deferred = [
-        n for n in names if n in _DEFER_TO_NEXT_ROUND and n not in done
-    ]
-    rest_new = [
-        n
-        for n in names
-        if n not in done and n not in lead and n not in deferred
-    ]
     # Never-attempted ops outrank ops that were attempted and failed;
     # among equals keep registration order (stable sort).
-    rest_new.sort(key=lambda n: attempts.get(n, 0))
-    lead.sort(key=lambda n: attempts.get(n, 0))
-    recert = [
-        n for n in _RECERTIFY if n in done and n not in lead and n not in rest_new
-    ]
+    rest_new = sorted((n for n in names if n not in done), key=lambda n: attempts.get(n, 0))
+    recert = [n for n in _RECERTIFY if n in done]
     certified = [n for n in names if n in done and n not in recert]
     # Order the certified tail STALEST-FIRST (latest certification round
     # ascending, registration order within a round): whatever free slots
     # remain in the driver's bounded window after new + recertify ops
     # re-verify the ops whose green row is oldest. Self-maintaining —
     # re-checked ops get a fresh round stamp and sink to the back, so
-    # successive rounds sweep the whole registry (round-5 VERDICT item 2:
-    # no op's latest CORRECTNESS row should age past ~3 rounds). A
-    # regression surfaced by the sweep re-enters rest_new next round via
-    # the recency rule in _certification_state.
+    # successive rounds sweep the whole registry. A regression surfaced
+    # by the sweep re-enters rest_new next round via the recency rule in
+    # _certification_state.
     certified.sort(key=lambda n: cert_round.get(n, 0))
     # Recertify entries go BEFORE never-certified new ops: a certified
-    # op whose implementation changed is the judge's stale-certification
-    # concern (round-4 ADVICE), while a brand-new op that misses the
-    # 50-entry window simply leads the next round's window.
-    return lead + recert + rest_new + certified + deferred
+    # op whose implementation changed carries a stale certification,
+    # while a brand-new op that misses the window simply leads the next
+    # round's window.
+    return recert + rest_new + certified
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -222,7 +126,7 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Ordered uncertified-first (see :func:`_certified`) so the driver's
+    Ordered recertify-first (see :func:`_ordered_names`) so the driver's
     bounded verification window accumulates coverage across rounds.
     """
     return {name: REGISTRY[name].fn for name in _ordered_names()}

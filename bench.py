@@ -7,41 +7,61 @@ ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 ``value`` is the WALL-CLOCK time to complete the whole query set with
-``$SPARK_GRAFT_BENCH_CONC`` (default 20) queries in flight at once —
+``$SPARK_GRAFT_BENCH_CONC`` (default 96) queries in flight at once —
 throughput, the number a batch of independent analytics jobs actually
-experiences. One Spark session schedules all concurrent jobs; this is the
-standard multi-tenant usage Spark is built for, and it keeps the cluster
-busy instead of idling 31 of 32 cores while a 300 ms query runs alone.
-Heavy queries launch first (longest-processing-time-first minimizes
-makespan). Per-query wall times are reported under contention; their sum
-(``sum_query_sec``, ≈ the old serial metric) is included alongside.
-Set SPARK_GRAFT_BENCH_CONC=1 for strictly serial timing.
+experiences. One Spark session schedules all concurrent jobs. Heavy
+queries launch first (longest-processing-time-first minimizes makespan);
+the launch order comes from the previous BENCH_DETAIL.json's serial
+seconds. Per-query wall times are reported under contention; their sum
+(``sum_query_sec``) is included alongside. Set SPARK_GRAFT_BENCH_CONC=1
+for strictly serial timing.
 
 Timing excludes session startup and an untimed warm-up pass of the full
 benched set at sf0.001 (JVM JIT + whole-stage-codegen compilation on the
 identical plans, 1000x less data), matching BASELINE.md §2's warm-JVM
-protocol. The reported wall is the best of $SPARK_GRAFT_BENCH_PASSES
-(default 2) full timed passes — single-shot wall on a shared host
-inflates >50% when a noisy neighbor lands in the window; both pass walls
-are recorded in the sidecar under "pass_walls".
+protocol. The reported wall is the best of 2 full timed passes — a
+single-shot wall on a shared host inflates >50% when a noisy neighbor
+lands in the window; both pass walls are recorded under "pass_walls".
+
+``SPARK_GRAFT_BENCH_FULL=1`` adds the round-close tiers to the sidecar:
+serial seconds for every benched op, the 10x scale probe, the 100x
+(sf10) probe, the sf1 headline, the streaming micro-tier and the paired
+single-thread DuckDB baseline. Every tier times through one kernel,
+:func:`time_calls`.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
 import sys
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 import cdc_pubsub_spark.all_queries  # noqa: F401
+from cdc_pubsub_spark import tables
 from cdc_pubsub_spark.registry import REGISTRY
 from cdc_pubsub_spark.session import get_spark
+
+DETAIL_PATH = os.path.join(HERE, "BENCH_DETAIL.json")
+WARM_DIR = "/root/testdata/sf0.001"
+# Timed passes per measurement (min reported): the first pass also pays
+# codegen for the op's nested lambdas, and min-of-2 drops one noise tail.
+PASSES = 2
+# 10x scale-probe gate: a ratio above it earns ESCALATE_PASSES more passes
+# per side in the same sitting, so noise and real growth separate inside
+# one artifact.
+GATE = 2.5
+ESCALATE_PASSES = 2
 
 # Ops whose OUTPUT is super-linear in the input by declared semantics
 # (near-dup pair emitters: the true pair set itself grows ~quadratically
@@ -82,92 +102,43 @@ SF10_CLOSED_VOCAB_QUADRATIC = {
     ),
 }
 
-# First-round probe rule (round-11 VERDICT item 7): every op REGISTERED
-# this round enters the scale-probe set once, regardless of serial rank
-# or plan flags — a brand-new op has no probe history, and the classes
-# the probe exists to catch (key-arithmetic overflow, hidden quadratic
-# candidates) hide at sf0.1. Refresh the set each round; after its
-# first probed round an op re-enters only via serial-top/plan flags.
-PROBE_FIRST_ROUND = {
-    # r14 post-close extension op — first probe due at the r15 close.
-    "graph_stress_sample",
-    # r15 registrations (each also sf10-previewed this session, see
-    # SCALING.md: betweenness 3.5x, dup-span 4x, dtw constant-work at
-    # 100x) plus the two ops whose scale shape changed this round.
-    "graph_betweenness_sample",
-    "text_dup_span_rate",
-    "ts_dtw_distance",
-    "ml_spearman_rho",
-    "dedup_incremental",
+# Streaming micro-tier: bench=False streaming/IO harnesses timed at a
+# fixed input size. op -> input table whose row count defines throughput
+# (None = wall-only: mixed/multi-table pipelines).
+STREAM_TIER = {
+    **{
+        name: "events"
+        for name in (
+            "stream_file_source stream_tumbling stream_sliding "
+            "stream_session stream_dedup stream_late_data stream_stateful "
+            "stream_stream_join stream_stream_left_outer stream_static_join "
+            "stream_update_mode stream_cdc_upsert stream_topk_windowed "
+            "stream_windowed_distinct stream_interval_join "
+            "stream_session_join stream_session_dynamic "
+            "stream_checkpoint_resume stream_push_ingest stream_health_drain "
+            "stream_socket_ingest stream_http_ingest source_python_stream "
+            "sink_pubsub_emulated sink_exactly_once_manifest"
+        ).split()
+    },
+    "sink_partitioned": "orders",
+    "sink_compaction": "orders",
+    "sink_zorder_cluster": "lineitem",
+    "pipeline_bridge_e2e": None,
+    "pipeline_metrics": None,
 }
 
-# Launch order seed: known-heavy ops first so they overlap the long tail
-# of sub-second queries instead of serializing at the end.
-HEAVY_FIRST = [
-    # Re-seeded r14 from a same-session serial sweep of the r13 heavy
-    # pool AFTER this round's rewrites (levenshtein persist, basket
-    # single-shuffle) — serial cost is the right launch-priority signal
-    # because contended per-query times are dominated by queue time,
-    # not plan cost. Movers: dedup_levenshtein_block drops from #1 to
-    # mid-pack (5.4 s -> 1.8 s), graph_eccentricity_sample enters the
-    # head (r13 wave op, 3.2 s).
-    "basket_brand_pairs",
-    "dedup_minhash_banded",
-    "graph_eccentricity_sample",
-    "text_keyword_rake",
-    # r15 additions: sampled-centrality siblings + the unrolled-DP op
-    # (serial 2.3-3.2 s at sf0.1 this session; spearman dropped out of
-    # the head after its single-pass rewrite, 1.8 s).
-    "graph_stress_sample",
-    "graph_betweenness_sample",
-    "ts_dtw_distance",
-    "orders_assoc_rules",
-    "dedup_incremental",
-    "ml_conformal_interval",
-    "orders_rfm_atscale",
-    "profile_cramers_v",
-    "orders_abc_xyz",
-    "tpch_q9_product_profit",
-    "sim_ann_pq",
-    "graph_rich_club",
-    "graph_adamic_adar",
-    "dedup_levenshtein_block",
-    "events_active_users",
-    "graph_clustering_coefficient",
-    "agg_theta_set_ops",
-    "agg_kmv_epoch_rollup",
-    "graph_pagerank",
-    "text_lm_perplexity",
-    "ml_kfold_cv",
-    "events_retention_halflife",
-    "text_bm25_topk",
-    # heaviest contended beyond the serial-top 20 (queue-pressure tail):
-    "dedup_containment",
-    "events_ab_sprt",
-    "events_alert_debounce",
-    "corpus_curriculum_order",
-    "corpus_resample_to_mix",
-    "dedup_embed_cosine",
-    "profile_fd_check",
-    "agg_kmv_theta_distinct",
-    "events_attribution",
-    "join_bloom_pruned",
-    # r16 re-seed from this round's full-registry serial sweep (227 s /
-    # 393 queries): the sweep's 1.3-2.7 s band included ten ops the seed
-    # missed — launch-priority only, additions not removals.
-    "ml_winsorized_trimmed_mean",
-    "ml_kendall_tau",
-    "ml_spearman_rho",
-    "text_rouge_pairs",
-    "ml_permutation_importance_ols",
-    "text_ngram_saturation",
-    "ml_learning_curve_ols",
-    "agg_approx_percentile",
-    "fn_ulid_roundtrip",
-    "corpus_contamination_bloom",
-    "profile_fd_confidence",
-    "ml_target_encoding_kfold",
-]
+# Sidecar blocks a run without SPARK_GRAFT_BENCH_FULL does not recompute;
+# they are carried over from the previous sidecar and listed under
+# "preserved_blocks".
+PRESERVABLE = (
+    "paired_duckdb",
+    "scale_probe",
+    "scale_probe_sf10",
+    "probe_selection",
+    "sf1_headline",
+    "streaming_tier",
+    "streaming_tier_delta",
+)
 
 
 def _top_groups(s: str) -> list[str]:
@@ -206,492 +177,229 @@ def _is_global_window(node: str) -> bool:
     return bool(re.search(r"\b(ASC|DESC|NULLS (FIRST|LAST))\b", groups[-1]))
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # Default 96-way: re-measured makespan-optimal on local[32] for the
-    # r10 289-query set (single-pass sweep, one host sitting:
-    # conc48 20.3 / conc64 19.6 / conc80 18.2 / conc96 17.5 /
-    # conc112 17.9 s — the optimum keeps moving right as the
-    # sub-second tail grows: r04 133q→16, r05 164q→20, r06 185q→24,
-    # r07 196q→48, r10 289q→96; past ~3 slots/core the scheduler
-    # thrash wins).
-    conc = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_CONC", "96")))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else None
+# ---------------------------------------------------------------------------
+# The timing kernel. Every tier, host_control and scripts/profile_op.py
+# time through time_calls.
 
-    spark = get_spark("cdc-pubsub-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
 
-    benched = [n for n in sorted(REGISTRY) if REGISTRY[n].bench]
-    order = [n for n in HEAVY_FIRST if n in benched] + [
-        n for n in benched if n not in HEAVY_FIRST
-    ]
+def time_calls(
+    call: Callable[[], object], passes: int, spark: SparkSession | None = None
+) -> tuple[list[float], list]:
+    """Time ``passes`` calls of ``call``; return every wall and result.
 
-    # Warm-up (untimed, per BASELINE.md §2's warm-JVM protocol): the full
-    # benched set once at sf0.001 — 1000× less DATA than the timed run,
-    # but the identical plans, so whole-stage-codegen compilation and JIT
-    # happen here instead of inside the timed window (first-ever run of a
-    # query pays ~0.3 s of codegen regardless of data volume). Falls back
-    # to the flagship-only warm-up if the smoke tree is absent.
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and os.path.abspath(warm_dir) != os.path.abspath(
-        sf_dir
-    ):
-        def warm(name: str) -> None:
-            try:
-                REGISTRY[name].fn(spark, warm_dir).collect()
-            except Exception:
-                pass  # timed phase will surface any real failure loudly
-        with ThreadPoolExecutor(max_workers=conc) as pool:
-            list(pool.map(warm, order))
-    REGISTRY["agg_hash_groupby"].fn(spark, sf_dir).collect()
+    With ``spark``, every cached intermediate is dropped before each pass,
+    so a pass cannot be served from the previous pass's block-manager
+    cache. Calls inside a concurrent pass go without it: the pass clears
+    once, and a clear mid-flight would evict caches other ops are using.
+    """
+    walls, results = [], []
+    for _ in range(passes):
+        if spark is not None:
+            spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        results.append(call())
+        walls.append(time.perf_counter() - t0)
+    return walls, results
 
-    def timed_pass() -> tuple[float, dict[str, float]]:
-        # Drop every cached intermediate before timing: the scan memo
-        # and any live persisted frames dedup by canonicalized plan in
-        # CacheManager — without this, pass 2 could be served from pass
-        # 1's block-manager cache and min(passes) would systematically
-        # report a warm-cache rerun instead of the noise-mitigated cold
-        # number. (Multi-consumer ops release their own caches via
-        # tables.finalize_cached since r06; this guard stays for the
-        # scan memo and any future persist.)
-        spark.catalog.clearCache()
+
+def measure(
+    spark: SparkSession, name: str, sf_dir: str, passes: int = 1, clear: bool = True
+) -> tuple[list[float], int]:
+    """(walls, result rows) of ``passes`` timed runs of one registry op."""
+    walls, counts = time_calls(
+        lambda: len(REGISTRY[name].fn(spark, sf_dir).collect()),
+        passes,
+        spark if clear else None,
+    )
+    return walls, counts[-1]
+
+
+# ---------------------------------------------------------------------------
+# Op lists derived from the previous sidecar and from this run. Spark-free
+# and unit-pinned in tests/test_bench.py.
+
+
+def load_prior() -> dict:
+    """The previous committed sidecar, or {} if absent or unreadable."""
+    try:
+        with open(DETAIL_PATH) as fh:
+            prior = json.load(fh)
+    except (OSError, ValueError):
+        return {}
+    return prior if isinstance(prior, dict) else {}
+
+
+def ranked(secs: dict[str, float]) -> list[str]:
+    """Names by descending seconds."""
+    return sorted(secs, key=lambda n: -secs[n])
+
+
+def launch_order(benched: list[str], prior: dict) -> list[str]:
+    """Benched ops by descending recorded serial seconds, then the rest in
+    registry order. Serial cost, not contended time, is the launch signal:
+    contended per-query times are dominated by queue time."""
+    serial = prior.get("serial_top") or {}
+    heavy = ranked({n: serial[n] for n in benched if n in serial})
+    return heavy + [n for n in benched if n not in serial]
+
+
+def first_round_probe(benched: list[str], prior: dict) -> list[str]:
+    """Benched ops with no row in the previous sidecar's ``queries``: a new
+    op has no probe history, and the classes the probe catches (key
+    overflow, hidden quadratic candidates) hide at sf0.1. Empty when there
+    is no previous sidecar to compare against."""
+    seen = prior.get("queries") or {}
+    return [n for n in benched if seen and n not in seen]
+
+
+def sf10_set(serial: dict[str, float], probe_ops: dict[str, dict]) -> list[str]:
+    """The serial top 10 plus the 5 highest 10x ratios of this run's scale
+    probe."""
+    head = ranked(serial)[:10]
+    ratios = {n: p["ratio"] for n, p in probe_ops.items() if n not in head}
+    return head + ranked(ratios)[:5]
+
+
+def probe_record(name: str, walls_by: dict[str, list], rows_by: dict[str, int]) -> dict:
+    """One scale-probe row from the walls of a small side and a large side
+    (dict order). ``ratio`` is the min-wall ratio; declared
+    output-quadratic ops also get ``ratio_per_output_row``."""
+    (lo, lo_walls), (hi, hi_walls) = walls_by.items()
+    per: dict = {}
+    for key, walls in walls_by.items():
+        per[f"{key}_sec"] = round(min(walls), 3)
+        per[f"{key}_walls"] = [round(w, 3) for w in walls]
+        per[f"{key}_rows"] = rows_by[key]
+    per["ratio"] = round(min(hi_walls) / min(lo_walls), 2)
+    if name in OUTPUT_QUADRATIC and rows_by[lo] > 0 and rows_by[hi] > 0:
+        per["ratio_per_output_row"] = round(
+            (min(hi_walls) / rows_by[hi]) / (min(lo_walls) / rows_by[lo]), 3
+        )
+    return per
+
+
+def gate_tripped(name: str, per: dict) -> bool:
+    """The 10x gate: ``ratio_per_output_row`` for output-quadratic ops
+    (raw ratio if either side emitted no rows), raw ratio otherwise."""
+    metric = per["ratio"]
+    if name in OUTPUT_QUADRATIC:
+        metric = per.get("ratio_per_output_row", metric)
+    return metric > GATE
+
+
+# ---------------------------------------------------------------------------
+# Tiers.
+
+
+def conc_tier(
+    spark: SparkSession, order: list[str], sf_dir: str, conc: int
+) -> tuple[list[float], list[dict[str, float]]]:
+    """PASSES full concurrent passes: (pass walls, per-query secs per pass)."""
+
+    def one_pass() -> dict[str, float]:
         times: dict[str, float] = {}
 
         def run(name: str) -> None:
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).collect()
-            times[name] = round(time.perf_counter() - t0, 3)
+            times[name] = round(measure(spark, name, sf_dir, clear=False)[0][0], 3)
 
-        t_wall = time.perf_counter()
         with ThreadPoolExecutor(max_workers=conc) as pool:
-            futures = [pool.submit(run, n) for n in order]
-            for f in futures:
+            for f in [pool.submit(run, n) for n in order]:
                 f.result()  # surface the first failure loudly
-        return round(time.perf_counter() - t_wall, 3), times
+        return times
 
-    # Best of N timed passes (default 2): single-shot wall on a shared
-    # host can inflate >50% when a noisy neighbor lands in the window
-    # (measured 10.4 s vs 18.4 s back-to-back for the identical set);
-    # min-of-N is the standard warm-benchmark answer. Both passes run
-    # the full set; the faster pass's per-query times are reported.
-    n_passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2")))
-    passes = [timed_pass() for _ in range(n_passes)]
-    wall, times = min(passes, key=lambda p: p[0])
+    walls, per_pass = time_calls(one_pass, PASSES, spark)
+    return [round(w, 3) for w in walls], per_pass
 
-    # Uncontended SERIAL re-measure of the top-20 heaviest (round-6
-    # VERDICT item 8): the concurrent per-query numbers include conc-N
-    # scheduler contention, so round-over-round deltas on a single op
-    # (e.g. basket_brand_pairs 3.75 → 5.03 s when conc went 20 → 24)
-    # can't be attributed to the op itself. One quiet serial pass per
-    # heavy op separates plan cost from contention; recorded in the
-    # sidecar as `serial_top`. Disable with SPARK_GRAFT_BENCH_SERIAL=0.
-    serial_top: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_SERIAL", "1") != "0":
-        spark.catalog.clearCache()
-        # Pool = contended top-20 ∪ the measured-heavy seed head: at
-        # high concurrency the launch-first heavies DRAIN EARLY and can
-        # show small contended times (dedup_levenshtein_block — the
-        # single slowest serial op — fell out of the contended top-20
-        # at conc96 and thereby out of the scale-probe set), so the
-        # known-heavy seed keeps them in the serial pool regardless of
-        # queue dynamics.
-        pool = sorted(times, key=lambda n: -times[n])[:20] + [
-            n for n in HEAVY_FIRST[:12] if n in times
-        ]
-        for name in dict.fromkeys(pool):
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).collect()
-            serial_top[name] = round(time.perf_counter() - t0, 3)
 
-    # The driver's stdout capture is bounded, and a single long JSON line
-    # (the ~120-entry per-query map is ~3.5 KB) did not survive it
-    # (BENCH_r01/r02 recorded no parseable stdout).  Contract fix: the full
-    # per-query map goes to a sidecar file, and the LAST stdout line is a
-    # short self-contained JSON summary (metric/value/unit/sf plus the
-    # heaviest queries only) guaranteed to fit in the capture window.
-    detail = {
-        "metric": f"wall_sec_{len(times)}_queries_conc{conc}",
-        "value": wall,
-        "unit": "sec",
-        "queries": {n: times[n] for n in sorted(times)},
-        "sum_query_sec": round(sum(times.values()), 3),
-        "concurrency": conc,
-        "sf": sf,
-        "pass_walls": [p[0] for p in passes],
-        "serial_top": serial_top,
-    }
+def serial_tier(spark: SparkSession, names: list[str], sf_dir: str) -> dict[str, float]:
+    """Uncontended single-pass seconds: separates plan cost from conc-N
+    scheduler contention."""
+    return {n: round(measure(spark, n, sf_dir)[0][0], 3) for n in dict.fromkeys(names)}
 
-    # Optional scale-probe tier (SPARK_GRAFT_BENCH_SCALE=1): re-time the
-    # 10 heaviest serial ops at 10x the bench data (the synthesized sf1
-    # tree from scripts/gen_scale_probe.py) and record the sf0.1→sf1
-    # time ratio per op. This validates the scaling-curve claims the
-    # docstrings make EMPIRICALLY: a linear-cost op lands well under
-    # ~12x (10x data + scheduling floor); a hidden single-partition
-    # sort/window or quadratic pair blow-up shows up as a much larger
-    # ratio. Off by default (cost ~2-4 min); the committed
-    # BENCH_DETAIL.json is produced WITH the probe (round-8 VERDICT
-    # item 7).
-    if os.environ.get("SPARK_GRAFT_BENCH_SCALE"):
-        scale_dir = os.environ.get(
-            "SPARK_GRAFT_SCALE_DIR",
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                ".scale_probe",
-                "sf1",
-            ),
-        )
-        if not os.path.isdir(scale_dir):
-            print(
-                f"bench: scale probe skipped, no tree at {scale_dir} "
-                "(run scripts/gen_scale_probe.py)",
-                file=sys.stderr,
-            )
-        else:
-            # Probe-set selection is CODE, not a hand-seeded list
-            # (round-9 VERDICT item 6 — dedup_levenshtein_block was only
-            # probed after it was already slow): the 10 slowest measured
-            # serial ops PLUS every benched op whose physical plan
-            # carries a risk shape that hides at sf0.1 — a GLOBAL
-            # data-sized window or a non-broadcast nested-loop join
-            # (CartesianProduct). Spark's Window node prints its three
-            # argument lists but SKIPS empty ones, so the rendered
-            # top-level bracket groups are: [exprs],[part],[order] = 3
-            # (partitioned+ordered), [exprs] = 1 (global, unordered),
-            # and the ambiguous [exprs],[X] = 2 where X is an ORDER
-            # spec (global+ordered — flag) exactly when it carries
-            # ordering markers (ASC/DESC/NULLS), which never appear in
-            # a bare partition-expression list (partitioned, unordered
-            # — don't flag).
-            slowest = sorted(
-                serial_top or times, key=lambda n: -(serial_top or times)[n]
-            )[:10]
 
-            plan_flagged: dict[str, str] = {}
-            from cdc_pubsub_spark import tables as _tables
-
-            # Plan SHAPE is sf-independent (PLANS.md contract), and
-            # several iterative trainers run driver-side .collect()
-            # loops while BUILDING their final DataFrame — so the scan
-            # builds plans against the tiny smoke tree when present
-            # (~1000x less data for the build-time collects), not the
-            # bench tree.
-            scan_dir = warm_dir if os.path.isdir(warm_dir) else sf_dir
-            for name in sorted(times):
-                try:
-                    _tables.LAZY_PLAN_MODE = True
-                    try:
-                        df = REGISTRY[name].fn(spark, scan_dir)
-                    finally:
-                        _tables.LAZY_PLAN_MODE = False
-                    plan = df._jdf.queryExecution().sparkPlan().toString()
-                except Exception as exc:  # plan build only — never fatal
-                    print(
-                        f"bench: probe-select plan scan failed for "
-                        f"{name}: {exc}",
-                        file=sys.stderr,
-                    )
-                    continue
-                for line in plan.splitlines():
-                    if "CartesianProduct" in line:
-                        plan_flagged[name] = "cartesian_product"
-                        break
-                    node = line.strip().lstrip("+-: ").strip()
-                    if node.startswith("Window [") and _is_global_window(node):
-                        plan_flagged[name] = "global_window"
-                        break
-            first_round = sorted(
-                n for n in PROBE_FIRST_ROUND if n in REGISTRY
-            )
-            probe_ops = list(
-                dict.fromkeys(slowest + sorted(plan_flagged) + first_round)
-            )
-            scale_probe: dict[str, dict[str, float]] = {}
-
-            def _probe_passes(name: str, d: str, n: int) -> tuple[list, int]:
-                walls = []
-                n_rows = 0
-                for _pass in range(n):
-                    spark.catalog.clearCache()
-                    t0 = time.perf_counter()
-                    n_rows = len(REGISTRY[name].fn(spark, d).collect())
-                    walls.append(time.perf_counter() - t0)
-                return walls, n_rows
-
-            for name in probe_ops:
-                per: dict[str, float] = {}
-                walls_by: dict[str, list] = {}
-                for key, d in (("sf01", sf_dir), ("sf1", scale_dir)):
-                    # Min-of-2 per (op, sf) from r15: the ratio gate was
-                    # repeatedly tripped by single-shot noise (r14 read
-                    # basket_brand_pairs at 2.75x; an interleaved
-                    # min-of-4 A/B re-measured 1.45x). The first pass
-                    # additionally pays codegen-compile for the op's
-                    # nested lambdas — min-of-2 removes both artifacts
-                    # for ~2x probe-tier cost, paid once per close.
-                    walls, n_rows = _probe_passes(name, d, 2)
-                    walls_by[key] = walls
-                    per[f"{key}_rows"] = n_rows
-                # r16 (r15 VERDICT item 2): the gate kept flip-flopping
-                # on basket_brand_pairs because min-of-2 still samples
-                # the sitting's noise tail (committed 3.51x vs 1.45x in
-                # another sitting). A TRIPPED gate now earns two more
-                # passes per side in the same sitting — escalation only
-                # on failure, all walls committed, so noise and real
-                # growth separate inside one artifact.
-                if (
-                    min(walls_by["sf1"]) / min(walls_by["sf01"]) > 2.5
-                    and name not in OUTPUT_QUADRATIC
-                ):
-                    per["escalated_passes"] = 2
-                    for key, d in (("sf01", sf_dir), ("sf1", scale_dir)):
-                        extra, _ = _probe_passes(name, d, 2)
-                        walls_by[key] += extra
-                for key in ("sf01", "sf1"):
-                    per[f"{key}_sec"] = round(min(walls_by[key]), 3)
-                    per[f"{key}_walls"] = [
-                        round(w, 3) for w in walls_by[key]
-                    ]
-                per["ratio"] = round(per["sf1_sec"] / per["sf01_sec"], 2)
-                # Output-quadratic pair emitters (round-10 VERDICT item
-                # 4): their OUTPUT grows superlinearly in the data by
-                # declared semantics (near-dup pair sets), so the raw
-                # time ratio conflates cost-per-unit-work with the
-                # work's own growth. For those, the per-emitted-row
-                # ratio is the scaling gate — it must stay ~O(1); the
-                # raw ratio is still recorded for the output-growth
-                # story itself.
-                if name in OUTPUT_QUADRATIC and per["sf01_rows"] > 0 and per[
-                    "sf1_rows"
-                ] > 0:
-                    per["ratio_per_output_row"] = round(
-                        (per["sf1_sec"] / per["sf1_rows"])
-                        / (per["sf01_sec"] / per["sf01_rows"]),
-                        3,
-                    )
-                scale_probe[name] = per
-            detail["scale_probe"] = {
-                "data_multiplier": 10,
-                "gate": (
-                    "ratio_per_output_row for ops in output_quadratic; "
-                    "raw ratio otherwise"
-                ),
-                "output_quadratic": sorted(OUTPUT_QUADRATIC),
-                "ops": scale_probe,
-            }
-            detail["probe_selection"] = {
-                "serial_top10": slowest,
-                "plan_flagged": plan_flagged,
-                "first_round": first_round,
-            }
-
-    # Optional 100x-direction probe (SPARK_GRAFT_BENCH_SCALE10=1, r14
-    # VERDICT item 6): the 10x tree is too small to expose super-linear
-    # terms in the heaviest ops (graph horizon joins, collect_set
-    # baskets) — re-time the top-10 serial ops at 100x the bench data
-    # (the sf10 tree from `SPARK_GRAFT_SCALE_REPLICAS=100
-    # scripts/gen_scale_probe.py`). Gate: raw ratio <= the 100x data
-    # multiplier for linear ops (per-output-row for declared
-    # output-quadratic emitters). Single-shot at sf10 (the 100x gate
-    # has ~2 decades of headroom over timing noise); the sf0.1 side
-    # reuses min-of-2.
-    if os.environ.get("SPARK_GRAFT_BENCH_SCALE10"):
-        scale10_dir = os.environ.get(
-            "SPARK_GRAFT_SCALE10_DIR",
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                ".scale_probe",
-                "sf10",
-            ),
-        )
-        if not os.path.isdir(scale10_dir):
-            print(
-                f"bench: sf10 probe skipped, no tree at {scale10_dir} "
-                "(run SPARK_GRAFT_SCALE_REPLICAS=100 "
-                "SPARK_GRAFT_SCALE_DIR=.scale_probe/sf10 "
-                "scripts/gen_scale_probe.py)",
-                file=sys.stderr,
-            )
-        else:
-            slowest10 = sorted(
-                serial_top or times, key=lambda n: -(serial_top or times)[n]
-            )[:10]
-            # r15 VERDICT item 9: the 100x tier caught the closed-vocab
-            # cliff the 10x tier missed — extend coverage beyond the
-            # serial top-10 with the next-heaviest window/join ops so
-            # the tier exercises every heavy plan family each close.
-            for extra in (
-                "text_lm_kneser_ney",
-                "orders_assoc_rules",
-                "events_active_users",
-                "text_rouge_pairs",
-                "ml_kendall_tau",
-            ):
-                if extra in REGISTRY and extra not in slowest10:
-                    slowest10.append(extra)
-            probe10: dict[str, dict[str, float]] = {}
-            for name in slowest10:
-                if name in SF10_CLOSED_VOCAB_QUADRATIC:
-                    probe10[name] = {
-                        "declared": SF10_CLOSED_VOCAB_QUADRATIC[name]
-                    }
-                    continue
-                per = {}
-                walls = []
-                for _pass in range(2):
-                    spark.catalog.clearCache()
-                    t0 = time.perf_counter()
-                    n_rows = len(
-                        REGISTRY[name].fn(spark, sf_dir).collect()
-                    )
-                    walls.append(time.perf_counter() - t0)
-                per["sf01_sec"] = round(min(walls), 3)
-                per["sf01_rows"] = n_rows
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                n_rows10 = len(
-                    REGISTRY[name].fn(spark, scale10_dir).collect()
-                )
-                per["sf10_sec"] = round(time.perf_counter() - t0, 3)
-                per["sf10_rows"] = n_rows10
-                per["ratio"] = round(per["sf10_sec"] / per["sf01_sec"], 2)
-                if name in OUTPUT_QUADRATIC and per["sf01_rows"] > 0 and (
-                    per["sf10_rows"] > 0
-                ):
-                    per["ratio_per_output_row"] = round(
-                        (per["sf10_sec"] / per["sf10_rows"])
-                        / (per["sf01_sec"] / per["sf01_rows"]),
-                        3,
-                    )
-                probe10[name] = per
-            detail["scale_probe_sf10"] = {
-                "data_multiplier": 100,
-                "gate": (
-                    "ratio <= 100 (data multiplier) for linear ops; "
-                    "ratio_per_output_row ~O(1) for output_quadratic; "
-                    "closed-vocab-quadratic ops carry their declaration "
-                    "instead of a probe slot"
-                ),
-                "ops": probe10,
-            }
-
-    # Optional sf1 headline tier (SPARK_GRAFT_BENCH_SF1=1): serial wall
-    # times for the headline-20 (the measured-heaviest launch seeds) at
-    # the 10x tree, so round-over-round perf claims rest on a data size
-    # where plan differences dominate scheduling overhead (round-10
-    # VERDICT item 6 — at sf0.1 half the benched set is overhead-bound
-    # and a plan regression can hide inside the ~0.3 s scheduling
-    # floor). Off by default; the committed BENCH_DETAIL.json is
-    # produced WITH it and the block is merge-preserved like the other
-    # sidecar tiers.
-    if os.environ.get("SPARK_GRAFT_BENCH_SF1"):
-        sf1_dir = os.environ.get(
-            "SPARK_GRAFT_SCALE_DIR",
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                ".scale_probe",
-                "sf1",
-            ),
-        )
-        if not os.path.isdir(sf1_dir):
-            print(
-                f"bench: sf1 headline tier skipped, no tree at {sf1_dir} "
-                "(run scripts/gen_scale_probe.py)",
-                file=sys.stderr,
-            )
-        else:
-            headline = [n for n in HEAVY_FIRST if n in REGISTRY][:20]
-            sf1_times: dict[str, float] = {}
-            for name in headline:
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                REGISTRY[name].fn(spark, sf1_dir).collect()
-                sf1_times[name] = round(time.perf_counter() - t0, 3)
-            detail["sf1_headline"] = {
-                "data_multiplier": 10,
-                "serial_wall_sec": round(sum(sf1_times.values()), 3),
-                "ops": sf1_times,
-            }
-
-    # Optional streaming micro-tier (SPARK_GRAFT_BENCH_STREAM=1): the
-    # ~99 bench=False ops are mostly streaming/IO harnesses excluded
-    # from the headline wall because their cost is fixture/transport
-    # setup, not query cost — which left them with NO perf signal at
-    # all (round-13 VERDICT item 7). This tier times each one at a
-    # FIXED input size (sf0.01 — frozen for cross-round comparability,
-    # override SPARK_GRAFT_STREAM_SF_DIR) and records wall seconds plus
-    # rows/s against the op's declared input table. Numbers are
-    # comparable ROUND-OVER-ROUND per op, not against the batch wall.
-    if os.environ.get("SPARK_GRAFT_BENCH_STREAM"):
-        stream_dir = os.environ.get(
-            "SPARK_GRAFT_STREAM_SF_DIR", "/root/testdata/sf0.01"
-        )
-        # op -> input table whose row count defines throughput (None =
-        # wall-only: mixed/multi-table pipelines).
-        STREAM_TIER = {
-            "stream_file_source": "events",
-            "stream_tumbling": "events",
-            "stream_sliding": "events",
-            "stream_session": "events",
-            "stream_dedup": "events",
-            "stream_late_data": "events",
-            "stream_stateful": "events",
-            "stream_stream_join": "events",
-            "stream_stream_left_outer": "events",
-            "stream_static_join": "events",
-            "stream_update_mode": "events",
-            "stream_cdc_upsert": "events",
-            "stream_topk_windowed": "events",
-            "stream_windowed_distinct": "events",
-            "stream_interval_join": "events",
-            "stream_session_join": "events",
-            "stream_session_dynamic": "events",
-            "stream_checkpoint_resume": "events",
-            "stream_push_ingest": "events",
-            "stream_health_drain": "events",
-            "stream_socket_ingest": "events",
-            "stream_http_ingest": "events",
-            "source_python_stream": "events",
-            "sink_pubsub_emulated": "events",
-            "sink_exactly_once_manifest": "events",
-            "sink_partitioned": "orders",
-            "sink_compaction": "orders",
-            "sink_zorder_cluster": "lineitem",
-            "pipeline_bridge_e2e": None,
-            "pipeline_metrics": None,
-        }
-        import pyarrow.parquet as _pq
-
-        _tbl_rows = {
-            t: _pq.read_metadata(
-                os.path.join(stream_dir, f"{t}.parquet")
-            ).num_rows
-            for t in sorted({v for v in STREAM_TIER.values() if v})
-        }
-        streaming_tier: dict[str, dict] = {}
-        for name, in_tbl in STREAM_TIER.items():
-            if name not in REGISTRY:
-                continue
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
+def plan_flags(spark: SparkSession, names: list[str], scan_dir: str) -> dict[str, str]:
+    """Ops whose physical plan carries a risk shape that hides at sf0.1: a
+    GLOBAL data-sized window or a non-broadcast nested-loop join. Plan
+    shape is sf-independent, so plans are built against the smallest
+    tree available (some trainers collect while building)."""
+    flagged: dict[str, str] = {}
+    for name in names:
+        try:
+            tables.LAZY_PLAN_MODE = True
             try:
-                out_rows = len(REGISTRY[name].fn(spark, stream_dir).collect())
-            except Exception as exc:
-                streaming_tier[name] = {"error": str(exc)[:160]}
-                continue
-            elapsed = time.perf_counter() - t0
-            sec = round(elapsed, 3)
-            entry: dict = {"wall_sec": sec, "out_rows": out_rows}
-            if in_tbl:
-                entry["input_table"] = in_tbl
-                entry["input_rows"] = _tbl_rows[in_tbl]
-                # Throughput from the UNROUNDED wall (r14 ADVICE item 3):
-                # a sub-millisecond wall rounds to 0.0 and would abort the
-                # whole bench run with ZeroDivisionError.
-                if elapsed > 0:
-                    entry["rows_per_sec"] = round(_tbl_rows[in_tbl] / elapsed, 1)
-            streaming_tier[name] = entry
-        detail["streaming_tier"] = {
+                df = REGISTRY[name].fn(spark, scan_dir)
+            finally:
+                tables.LAZY_PLAN_MODE = False
+            plan = df._jdf.queryExecution().sparkPlan().toString()
+        except Exception as exc:  # plan build only — never fatal
+            print(f"bench: probe-select plan scan failed for {name}: {exc}", file=sys.stderr)
+            continue
+        for line in plan.splitlines():
+            if "CartesianProduct" in line:
+                flagged[name] = "cartesian_product"
+                break
+            node = line.strip().lstrip("+-: ").strip()
+            if node.startswith("Window [") and _is_global_window(node):
+                flagged[name] = "global_window"
+                break
+    return flagged
+
+
+def scale_probe_op(
+    spark: SparkSession, name: str, sides: tuple[tuple[str, str, int], ...], escalate: bool
+) -> dict:
+    """Probe one op on (key, dir, passes) sides; a tripped gate earns
+    ESCALATE_PASSES more passes per side when ``escalate``."""
+    walls_by: dict[str, list] = {}
+    rows_by: dict[str, int] = {}
+    for key, d, n in sides:
+        walls_by[key], rows_by[key] = measure(spark, name, d, n)
+    per = probe_record(name, walls_by, rows_by)
+    if escalate and gate_tripped(name, per):
+        for key, d, _ in sides:
+            walls_by[key] += measure(spark, name, d, ESCALATE_PASSES)[0]
+        per = probe_record(name, walls_by, rows_by)
+        per["escalated_passes"] = ESCALATE_PASSES
+    return per
+
+
+def _tree(env: str, default_sub: str, what: str, hint: str) -> str | None:
+    d = os.environ.get(env, os.path.join(HERE, ".scale_probe", default_sub))
+    if os.path.isdir(d):
+        return d
+    print(f"bench: {what} skipped, no tree at {d} (run {hint})", file=sys.stderr)
+    return None
+
+
+def streaming_tier(spark: SparkSession, stream_dir: str, prior: dict) -> dict[str, dict]:
+    """Fixed-input micro-tier for the bench=False streaming/IO harnesses,
+    plus a throughput delta against the previous sidecar (>30% slower is
+    flagged as a triage queue, not a gate)."""
+    import pyarrow.parquet as pq
+
+    in_rows = {
+        t: pq.read_metadata(os.path.join(stream_dir, f"{t}.parquet")).num_rows
+        for t in sorted({v for v in STREAM_TIER.values() if v})
+    }
+    ops: dict[str, dict] = {}
+    for name, in_tbl in STREAM_TIER.items():
+        if name not in REGISTRY:
+            continue
+        try:
+            walls, out_rows = measure(spark, name, stream_dir)
+        except Exception as exc:
+            ops[name] = {"error": str(exc)[:160]}
+            continue
+        entry: dict = {"wall_sec": round(walls[0], 3), "out_rows": out_rows}
+        if in_tbl:
+            entry["input_table"] = in_tbl
+            entry["input_rows"] = in_rows[in_tbl]
+            # From the UNROUNDED wall: a sub-millisecond wall rounds to 0.
+            if walls[0] > 0:
+                entry["rows_per_sec"] = round(in_rows[in_tbl] / walls[0], 1)
+        ops[name] = entry
+    out = {
+        "streaming_tier": {
             "sf_dir": stream_dir,
             "note": (
                 "fixed-input micro-tier for bench=False streaming/IO "
@@ -699,243 +407,272 @@ def main() -> None:
                 "design — compare per-op across rounds, not vs the "
                 "batch wall"
             ),
-            "ops": streaming_tier,
+            "ops": ops,
         }
-        # Round-over-round teeth (r14 VERDICT item 7): compare this
-        # run's per-op rows/s against the previous committed sidecar's
-        # streaming_tier and flag >30% throughput regressions, so a
-        # transport-harness slowdown surfaces in the artifact instead
-        # of waiting for a judge's hand diff. Raw-wall noise on these
-        # sub-second harnesses is real — the flag list is a triage
-        # queue, not a gate.
-        try:
-            with open(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BENCH_DETAIL.json",
-                )
-            ) as fh:
-                _prev_st = (
-                    json.load(fh).get("streaming_tier") or {}
-                ).get("ops") or {}
-        except (OSError, ValueError):
-            _prev_st = {}
-        _st_deltas: dict[str, dict] = {}
-        _st_flags: list[str] = []
-        for name, entry in streaming_tier.items():
-            prev = _prev_st.get(name) or {}
-            cur_rps, prev_rps = entry.get("rows_per_sec"), prev.get(
-                "rows_per_sec"
-            )
-            if not (
-                isinstance(cur_rps, (int, float))
-                and isinstance(prev_rps, (int, float))
-                and prev_rps > 0
-            ):
-                continue
-            ratio = round(cur_rps / prev_rps, 3)
-            _st_deltas[name] = {
-                "rows_per_sec_prev": prev_rps,
-                "rows_per_sec_now": cur_rps,
-                "throughput_ratio": ratio,
-            }
-            if ratio < 0.7:
-                _st_flags.append(name)
-        if _st_deltas:
-            detail["streaming_tier_delta"] = {
-                "vs": "previous committed BENCH_DETAIL.json",
-                "regression_gate": "throughput_ratio < 0.7 flags",
-                "flagged": sorted(_st_flags),
-                "ops": _st_deltas,
-            }
-
-    # Host-drift control (round-11 VERDICT item 6): a FIXED synthetic
-    # workload, independent of the registry, timed in the same process
-    # right after the benchmark — so every BENCH_r{N} sidecar carries
-    # its own measure of how fast this host was AT MEASUREMENT TIME.
-    # Round-over-round wall comparisons divide by the control ratio
-    # instead of hand-running worktree A/Bs (the r11 close had to:
-    # 17.88 s read as +4% vs r10 until a same-host A/B showed the host
-    # itself ran 1.2x slower). The three probes cover the three cost
-    # regimes: pure-CPU shuffle agg, wide-key exchange, and parquet
-    # scan I/O on the bench tree. NEVER change these definitions — the
-    # block is only comparable across rounds because it is frozen.
-    def _host_control() -> dict[str, float]:
-        probes = {
-            "cpu_agg_sec": lambda: spark.range(100_000_000)
-            .selectExpr("id % 997 AS k", "id AS v")
-            .groupBy("k")
-            .agg(F.sum("v"), F.count(F.lit(1)))
-            .collect(),
-            "shuffle_sec": lambda: spark.range(20_000_000)
-            .selectExpr("id % 2000000 AS k", "id AS v")
-            .groupBy("k")
-            .agg(F.sum("v"))
-            .selectExpr("count(*) AS n", "sum(`sum(v)`) AS s")
-            .collect(),
-            "scan_sec": lambda: spark.read.parquet(
-                os.path.join(sf_dir, "lineitem.parquet")
-            )
-            .selectExpr("sum(l_extendedprice)", "count(*)")
-            .collect(),
-        }
-        out: dict[str, float] = {}
-        for key, fn in probes.items():
-            best = float("inf")
-            for _ in range(2):  # min-of-2, same policy as the passes
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn()
-                best = min(best, time.perf_counter() - t0)
-            out[key] = round(best, 3)
-        return out
-
-    detail["host_control"] = _host_control()
-
-    # r15 VERDICT item 7: PERF's bench_harness_changed hint missed real
-    # bench.py edits — stamp this file's git blob sha into the sidecar so
-    # the judge/driver can diff mechanically (`git hash-object bench.py`).
-    try:
-        import hashlib
-
-        _self = os.path.abspath(__file__)
-        _body = open(_self, "rb").read()
-        detail["bench_py_sha"] = hashlib.sha1(
-            b"blob %d\0" % len(_body) + _body
-        ).hexdigest()
-    except OSError:
-        pass
-
-    # Automatic drift annotation (round-12 VERDICT item 8): compare this
-    # run's control block against the PREVIOUS committed sidecar's and
-    # carry the computed factor, so the round-over-round wall comparison
-    # is drift-corrected in the artifact itself instead of hand-run.
-    # factor > 1 means this host ran SLOWER than at the previous
-    # measurement; divide wall deltas by it before reading them as real.
-    try:
-        with open(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "BENCH_DETAIL.json",
-            )
-        ) as fh:
-            _prev_ctl = json.load(fh).get("host_control") or {}
-    except (OSError, ValueError):
-        _prev_ctl = {}
-    _ratios = {
-        k: round(detail["host_control"][k] / _prev_ctl[k], 3)
-        for k in detail["host_control"]
-        if isinstance(_prev_ctl.get(k), (int, float)) and _prev_ctl[k] > 0
     }
-    if _ratios:
-        _prod = 1.0
-        for r in _ratios.values():
-            _prod *= r
-        detail["host_drift"] = {
-            "prev_control": _prev_ctl,
-            "probe_ratios": _ratios,
-            "host_drift_factor": round(_prod ** (1.0 / len(_ratios)), 3),
+    prev_ops = (prior.get("streaming_tier") or {}).get("ops") or {}
+    deltas: dict[str, dict] = {}
+    for name, entry in ops.items():
+        cur, prev = entry.get("rows_per_sec"), (prev_ops.get(name) or {}).get("rows_per_sec")
+        if isinstance(cur, (int, float)) and isinstance(prev, (int, float)) and prev > 0:
+            deltas[name] = {
+                "rows_per_sec_prev": prev,
+                "rows_per_sec_now": cur,
+                "throughput_ratio": round(cur / prev, 3),
+            }
+    if deltas:
+        out["streaming_tier_delta"] = {
+            "vs": "previous committed BENCH_DETAIL.json",
+            "regression_gate": "throughput_ratio < 0.7 flags",
+            "flagged": sorted(n for n, d in deltas.items() if d["throughput_ratio"] < 0.7),
+            "ops": deltas,
         }
+    return out
 
-    # Optional paired baseline (SPARK_GRAFT_BENCH_PAIR=1): run the
-    # IDENTICAL oracle-SQL set serially in single-threaded DuckDB on the
-    # same host state, immediately after the Spark passes — the judge's
-    # bench-vs-baseline ratio measured in one sitting instead of stitched
-    # from different host conditions. Off by default (the round driver
-    # only times the Spark side); the committed BENCH_DETAIL.json is
-    # produced WITH pairing so both numbers live in one artifact.
-    if os.environ.get("SPARK_GRAFT_BENCH_PAIR"):
-        import duckdb
 
-        # Stop the Spark JVM BEFORE the single-thread baseline runs:
-        # with the 128 GiB executor JVM alive, the duck pass measured
-        # 2.5-3x slower than the identical oracles standalone (r13
-        # close: 269-324 s in-process vs 108.6 s standalone) — GC /
-        # daemon-thread and page-cache interference, not query cost.
-        # Nothing after this point uses Spark (the sidecar write and
-        # the summary print consume only collected dicts).
-        spark.stop()
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")
-        for t in (
-            "region nation customer supplier part orders lineitem "
-            "events documents embeddings"
-        ).split():
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
+def host_control(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+    """A FIXED synthetic workload, independent of the registry, so every
+    sidecar carries its own measure of how fast the host was: pure-CPU
+    shuffle agg, wide-key exchange, and parquet scan I/O. NEVER change
+    these definitions — the block is comparable across runs only because
+    it is frozen."""
+    probes = {
+        "cpu_agg_sec": lambda: spark.range(100_000_000)
+        .selectExpr("id % 997 AS k", "id AS v")
+        .groupBy("k")
+        .agg(F.sum("v"), F.count(F.lit(1)))
+        .collect(),
+        "shuffle_sec": lambda: spark.range(20_000_000)
+        .selectExpr("id % 2000000 AS k", "id AS v")
+        .groupBy("k")
+        .agg(F.sum("v"))
+        .selectExpr("count(*) AS n", "sum(`sum(v)`) AS s")
+        .collect(),
+        "scan_sec": lambda: spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+        .selectExpr("sum(l_extendedprice)", "count(*)")
+        .collect(),
+    }
+    return {k: round(min(time_calls(fn, PASSES, spark)[0]), 3) for k, fn in probes.items()}
+
+
+def host_drift(control: dict[str, float], prior: dict) -> dict | None:
+    """Drift factor vs the previous sidecar's control block (geomean of
+    probe ratios; > 1 means this host ran SLOWER — divide wall deltas by
+    it before reading them as real)."""
+    prev = prior.get("host_control") or {}
+    ratios = {
+        k: round(control[k] / prev[k], 3)
+        for k in control
+        if isinstance(prev.get(k), (int, float)) and prev[k] > 0
+    }
+    if not ratios:
+        return None
+    prod = 1.0
+    for r in ratios.values():
+        prod *= r
+    return {
+        "prev_control": prev,
+        "probe_ratios": ratios,
+        "host_drift_factor": round(prod ** (1.0 / len(ratios)), 3),
+    }
+
+
+def paired_duckdb(sf_dir: str, wall: float) -> dict:
+    """The identical oracle-SQL set, serially in single-threaded DuckDB on
+    the same host state. Call only after the Spark JVM has stopped: with
+    it alive the DuckDB pass measured 2.5-3x slower (GC / page-cache
+    interference, not query cost)."""
+    from tests.parity import duck_connection
+
+    con = duck_connection(sf_dir)
+    con.execute("SET threads TO 1")
+    orcs = [REGISTRY[n].oracle for n in sorted(REGISTRY) if REGISTRY[n].bench and REGISTRY[n].oracle]
+
+    def run_all() -> None:
+        for q in orcs:
+            con.execute(q).fetchall()
+
+    run_all()  # warm pass: page cache + catalog, like Spark's
+    duck_wall = round(time_calls(run_all, 1)[0][0], 3)
+    con.close()
+    return {
+        "serial_wall_sec": duck_wall,
+        "n_queries": len(orcs),
+        "threads": 1,
+        # The Spark wall THIS ratio was computed against: a later rerun
+        # may merge-preserve this block under a different "value".
+        "spark_wall_used": wall,
+        "ratio_spark_over_duckdb": round(wall / duck_wall, 3),
+    }
+
+
+def full_tiers(
+    spark: SparkSession,
+    sf_dir: str,
+    serial: dict[str, float],
+    benched: list[str],
+    prior: dict,
+) -> dict:
+    """The round-close tiers (SPARK_GRAFT_BENCH_FULL=1) except the paired
+    DuckDB baseline, which needs the JVM stopped."""
+    out: dict = {}
+    slowest = ranked(serial)[:10]
+    probe_ops: dict[str, dict] = {}
+    scale_dir = _tree("SPARK_GRAFT_SCALE_DIR", "sf1", "scale probe", "scripts/gen_scale_probe.py")
+    if scale_dir:
+        # 10x probe: the 10 slowest serial ops, every op with a risky plan
+        # shape, and every op new since the previous sidecar.
+        scan_dir = WARM_DIR if os.path.isdir(WARM_DIR) else sf_dir
+        flagged = plan_flags(spark, benched, scan_dir)
+        first_round = first_round_probe(benched, prior)
+        for name in dict.fromkeys(slowest + sorted(flagged) + first_round):
+            probe_ops[name] = scale_probe_op(
+                spark, name, (("sf01", sf_dir, PASSES), ("sf1", scale_dir, PASSES)), True
             )
-        orcs = [
-            (n, REGISTRY[n].oracle)
-            for n in sorted(REGISTRY)
-            if REGISTRY[n].bench and REGISTRY[n].oracle
-        ]
-        for n, q in orcs:  # warm pass: page cache + catalog, like Spark's
-            con.execute(q).fetchall()
-        t0 = time.perf_counter()
-        for n, q in orcs:
-            con.execute(q).fetchall()
-        duck_wall = round(time.perf_counter() - t0, 3)
-        detail["paired_duckdb"] = {
-            "serial_wall_sec": duck_wall,
-            "n_queries": len(orcs),
-            "threads": 1,
-            # The Spark wall THIS ratio was computed against (r14 VERDICT
-            # item 5): the sidecar's top-level "value" can be overwritten
-            # by a later driver re-run that merge-preserves this block,
-            # so without the stamp the committed ratio and the committed
-            # wall can silently refer to different sittings.
-            "spark_wall_used": wall,
-            "ratio_spark_over_duckdb": round(wall / duck_wall, 3),
+        out["scale_probe"] = {
+            "data_multiplier": 10,
+            "gate": "ratio_per_output_row for ops in output_quadratic; raw ratio otherwise",
+            "output_quadratic": sorted(OUTPUT_QUADRATIC),
+            "ops": probe_ops,
         }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+        out["probe_selection"] = {
+            "serial_top10": slowest,
+            "plan_flagged": flagged,
+            "first_round": first_round,
+        }
+        # sf1 headline: serial walls of the 20 heaviest serial ops at the
+        # 10x tree, where plan differences dominate the scheduling floor.
+        sf1_times = serial_tier(spark, ranked(serial)[:20], scale_dir)
+        out["sf1_headline"] = {
+            "data_multiplier": 10,
+            "serial_wall_sec": round(sum(sf1_times.values()), 3),
+            "ops": sf1_times,
+        }
+    scale10_dir = _tree(
+        "SPARK_GRAFT_SCALE10_DIR",
+        "sf10",
+        "sf10 probe",
+        "SPARK_GRAFT_SCALE_REPLICAS=100 SPARK_GRAFT_SCALE_DIR=.scale_probe/sf10 "
+        "scripts/gen_scale_probe.py",
     )
-    # Merge-preserve sidecar blocks this run did NOT recompute (round-9
-    # VERDICT item 7): a driver-style rerun without SCALE/PAIR used to
-    # overwrite the committed artifact and silently drop the
-    # paired-DuckDB and scale-probe tiers. Preserved blocks are listed
-    # under "preserved_blocks" so a reader can tell recomputed from
-    # carried-over.
-    preservable = (
-        "paired_duckdb",
-        "scale_probe",
-        "scale_probe_sf10",
-        "probe_selection",
-        "sf1_headline",
-        "streaming_tier",
-        "streaming_tier_delta",
-    )
-    try:
-        with open(detail_path) as fh:
-            prior = json.load(fh)
-    except (OSError, ValueError):
-        prior = {}
-    carried = [
-        k for k in preservable if k not in detail and isinstance(prior.get(k), dict)
-    ]
+    if scale10_dir:
+        # 100x probe, single-shot at sf10: the gate has ~2 decades of
+        # headroom over timing noise, so no escalation.
+        probe10: dict[str, dict] = {}
+        for name in sf10_set(serial, probe_ops):
+            if name in SF10_CLOSED_VOCAB_QUADRATIC:
+                probe10[name] = {"declared": SF10_CLOSED_VOCAB_QUADRATIC[name]}
+            else:
+                probe10[name] = scale_probe_op(
+                    spark, name, (("sf01", sf_dir, PASSES), ("sf10", scale10_dir, 1)), False
+                )
+        out["scale_probe_sf10"] = {
+            "data_multiplier": 100,
+            "gate": (
+                "ratio <= 100 (data multiplier) for linear ops; "
+                "ratio_per_output_row ~O(1) for output_quadratic; "
+                "closed-vocab-quadratic ops carry their declaration "
+                "instead of a probe slot"
+            ),
+            "ops": probe10,
+        }
+    stream_dir = os.environ.get("SPARK_GRAFT_STREAM_SF_DIR", "/root/testdata/sf0.01")
+    out.update(streaming_tier(spark, stream_dir, prior))
+    return out
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # 96-way is makespan-optimal on local[32] for the ~300-400 query set;
+    # past ~3 slots/core the scheduler thrash wins.
+    conc = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_CONC", "96")))
+    full = os.environ.get("SPARK_GRAFT_BENCH_FULL", "") not in ("", "0")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1).rstrip(".")) if m else None
+
+    prior = load_prior()
+    benched = [n for n in sorted(REGISTRY) if REGISTRY[n].bench]
+    order = launch_order(benched, prior)
+
+    spark = get_spark("cdc-pubsub-spark-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    # Untimed warm-up (BASELINE.md §2): the full benched set once at
+    # sf0.001 — identical plans, 1000x less data — so codegen and JIT
+    # happen outside the timed window.
+    if os.path.isdir(WARM_DIR) and os.path.abspath(WARM_DIR) != os.path.abspath(sf_dir):
+
+        def warm(name: str) -> None:
+            try:
+                REGISTRY[name].fn(spark, WARM_DIR).collect()
+            except Exception:
+                pass  # the timed phase surfaces any real failure loudly
+
+        with ThreadPoolExecutor(max_workers=conc) as pool:
+            list(pool.map(warm, order))
+    REGISTRY["agg_hash_groupby"].fn(spark, sf_dir).collect()
+
+    pass_walls, per_pass = conc_tier(spark, order, sf_dir, conc)
+    best = min(range(len(pass_walls)), key=lambda i: pass_walls[i])
+    wall, times = pass_walls[best], per_pass[best]
+
+    # Serial tier: every benched op in full mode; otherwise the contended
+    # top 20 plus the recorded serial head (heavies launched first drain
+    # early and can show small contended times).
+    serial_names = benched if full else ranked(times)[:20] + order[:12]
+    serial = serial_tier(spark, serial_names, sf_dir)
+
+    detail: dict = {
+        "metric": f"wall_sec_{len(times)}_queries_conc{conc}",
+        "value": wall,
+        "unit": "sec",
+        "queries": {n: times[n] for n in sorted(times)},
+        "sum_query_sec": round(sum(times.values()), 3),
+        "concurrency": conc,
+        "sf": sf,
+        "pass_walls": pass_walls,
+        "serial_top": serial,
+    }
+    if full:
+        detail.update(full_tiers(spark, sf_dir, serial, benched, prior))
+    detail["host_control"] = host_control(spark, sf_dir)
+    drift = host_drift(detail["host_control"], prior)
+    if drift:
+        detail["host_drift"] = drift
+    # git blob sha of this file, so a reader can tell which harness made
+    # the sidecar (`git hash-object bench.py`).
+    with open(os.path.abspath(__file__), "rb") as fh:
+        body = fh.read()
+    detail["bench_py_sha"] = hashlib.sha1(b"blob %d\0" % len(body) + body).hexdigest()
+    if full:
+        spark.stop()
+        detail["paired_duckdb"] = paired_duckdb(sf_dir, wall)
+
+    carried = [k for k in PRESERVABLE if k not in detail and isinstance(prior.get(k), dict)]
     for k in carried:
         detail[k] = prior[k]
     if carried:
         detail["preserved_blocks"] = carried
     detail_ref: str | None = "BENCH_DETAIL.json"
     try:
-        with open(detail_path, "w") as fh:
+        with open(DETAIL_PATH, "w") as fh:
             json.dump(detail, fh, indent=1, sort_keys=True)
     except OSError as exc:
         # A stale sidecar from a prior run must not masquerade as this
         # run's data: advertise no sidecar and say why on stderr.
         detail_ref = None
         print(f"bench: BENCH_DETAIL.json not written: {exc}", file=sys.stderr)
+    # The driver's stdout capture is bounded: the LAST line is a short
+    # summary with the heaviest queries only; the full map is the sidecar.
     heavy = dict(sorted(times.items(), key=lambda kv: -kv[1])[:10])
     print(
         json.dumps(
             {
-                "metric": f"wall_sec_{len(times)}_queries_conc{conc}",
+                "metric": detail["metric"],
                 "value": wall,
                 "unit": "sec",
                 "queries": {n: heavy[n] for n in sorted(heavy)},
-                "sum_query_sec": round(sum(times.values()), 3),
+                "sum_query_sec": detail["sum_query_sec"],
                 "concurrency": conc,
                 "sf": sf,
                 "detail": detail_ref,

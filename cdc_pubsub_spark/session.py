@@ -13,6 +13,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+from cdc_pubsub_spark.paths import work_dir
+
+# Local mode runs everything in the driver JVM, so its heap is the one
+# memory knob that matters. Take half of physical memory (the rest is for
+# Python workers, off-heap buffers and the OS), capped at 24 GiB.
+_MAX_DRIVER_GIB = 24
+
+
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` default: half of physical memory in whole
+    GiB, at least 1g and at most 24g."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(_MAX_DRIVER_GIB, phys // 2 // 2**30))}g"
+
 
 def get_spark(app_name: str = "cdc-pubsub-spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config.
@@ -68,13 +82,17 @@ def get_spark(app_name: str = "cdc-pubsub-spark", cpus: int | None = None) -> Sp
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
-        # Local mode = driver-only JVM; this is the one memory knob that
-        # matters (host has 128 GiB; leave room for Python workers).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
-        # Warehouse for bucketed tables (join_bucketed_colocated) — kept
-        # out of the repo tree.
-        .config("spark.sql.warehouse.dir", f"/tmp/cdc_pubsub_spark_warehouse_{os.getpid()}")
+        # No `[Stage N:>` progress bars on the console: bench and test logs
+        # carry signal only.
+        .config("spark.ui.showConsoleProgress", "false")
+        # Warehouse for bucketed tables (join_bucketed_colocated): in the
+        # per-process scratch root, which is removed at exit.
+        .config("spark.sql.warehouse.dir", work_dir("warehouse"))
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "false")
     )
     return builder.getOrCreate()

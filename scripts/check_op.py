@@ -1,7 +1,10 @@
 #!/usr/bin/env python
-"""Oracle-parity check for named ops at one or more scale factors,
-replicating the driver's comparison (sorted rounded tuples + schema +
-rowcount). Usage: python scripts/check_op.py OP [OP...] [--sf sf0.001,sf0.01]
+"""Oracle-parity check for named ops at one or more scale factors, on the
+test suite's comparator (tests/parity.py::assert_parity: schema, dtype
+kinds, row count, canonical sorted rows).
+
+Usage: python scripts/check_op.py OP [OP...] [--sf sf0.001,sf0.01]
+Exits 1 if any op mismatches its oracle.
 """
 
 from __future__ import annotations
@@ -12,16 +15,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
 import cdc_pubsub_spark.all_queries  # noqa: F401
 from cdc_pubsub_spark.registry import REGISTRY
 from cdc_pubsub_spark.session import get_spark
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from tests.parity import assert_parity
 
 
 def main() -> None:
@@ -35,44 +32,17 @@ def main() -> None:
     bad = 0
     for sf in args.sf.split(","):
         sf_dir = f"/root/testdata/{sf}"
-        con = duckdb.connect()
-        for t in TABLES:
-            con.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
-            )
         for name in args.ops:
-            spec = REGISTRY[name]
-            sdf = spec.fn(spark, sf_dir).toPandas()
-            if spec.oracle is None:
-                print(f"{sf} {name}: rows-only, {len(sdf)} rows")
+            if REGISTRY[name].oracle is None:
+                n = len(REGISTRY[name].fn(spark, sf_dir).collect())
+                print(f"{sf} {name}: rows-only, {n} rows")
                 continue
-            ddf = con.sql(spec.oracle).df()
-            cols = sorted(sdf.columns)
-            s = sorted(
-                map(str, sdf[cols].round(4).itertuples(index=False, name=None))
-            )
-            d = sorted(
-                map(
-                    str,
-                    ddf[sorted(ddf.columns)]
-                    .round(4)
-                    .itertuples(index=False, name=None),
-                )
-            )
-            ok = cols == sorted(ddf.columns) and len(sdf) == len(ddf) and s == d
-            if not ok:
+            try:
+                assert_parity(spark, name, sf_dir)
+                print(f"{sf} {name}: MATCH")
+            except AssertionError as exc:
                 bad += 1
-                for a, b in zip(s, d):
-                    if a != b:
-                        print(f"   spark={a}\n   duck ={b}")
-                        break
-            print(
-                f"{sf} {name}: schema={cols == sorted(ddf.columns)} "
-                f"rowcount={len(sdf) == len(ddf)}({len(sdf)}) "
-                f"values={'MATCH' if s == d else 'MISMATCH'}"
-            )
-        con.close()
+                print(f"{sf} {name}: MISMATCH {exc}")
     sys.exit(1 if bad else 0)
 
 

@@ -10,8 +10,8 @@
 #   2. Regenerate PLANS.md (plan audit)
 #   3. Regenerate the cert-debt tables in STATUS.md + README.md
 #   4. Full test suite
-#   5. Cold-discard bench run, then the full-tier bench (SCALE + PAIR +
-#      SF1 + host_control) that writes the committed BENCH_DETAIL.json
+#   5. Cold-discard bench run, then the full-tier bench
+#      (SPARK_GRAFT_BENCH_FULL=1) that writes the committed BENCH_DETAIL.json
 #
 # After it exits green: update the STATUS.md round section by hand,
 # verify the driver window (`_ordered_names()[:50]` arithmetic), commit.
@@ -27,6 +27,5 @@ python -m pytest tests/ -x -q
 if [[ "${1:-}" != "--no-bench" ]]; then
   # First run after boot reads cold page cache — discard it.
   python bench.py > /dev/null 2>&1 || true
-  SPARK_GRAFT_BENCH_SCALE=1 SPARK_GRAFT_BENCH_PAIR=1 SPARK_GRAFT_BENCH_SF1=1 \
-    SPARK_GRAFT_BENCH_STREAM=1 SPARK_GRAFT_BENCH_SCALE10=1 python bench.py
+  SPARK_GRAFT_BENCH_FULL=1 python bench.py
 fi

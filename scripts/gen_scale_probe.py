@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Synthesize the sf1 scale-probe tree: 10x the sf0.1 bench data.
 
-The bench's scale-probe tier (SPARK_GRAFT_BENCH_SCALE=1) re-times the
+The bench's scale-probe tier (SPARK_GRAFT_BENCH_FULL=1) re-times the
 heaviest serial ops at 10x the data to validate the scaling-curve claims
 operator docstrings make — a single-partition bottleneck that hides at
 sf0.1 shows up as a >>10x time ratio here, empirically, instead of by

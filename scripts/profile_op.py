@@ -7,10 +7,10 @@ Usage:
 
 For each named op: builds the DataFrame, optionally dumps
 ``explain('formatted')`` to OUTDIR/<op>.txt, then times N serial passes
-(clearCache between passes, min reported). Timing action is ``.collect()``
-by default (matches bench.py's serial_top methodology); ``--noop`` uses
-the noop sink instead (guide §1.4) — use it when driver-transfer cost
-could mask the computation.
+(clearCache between passes, min reported) through bench.py's timing
+kernel. Timing action is ``.collect()`` by default (bench.py's serial
+tier); ``--noop`` uses the noop sink instead (guide §1.4) — use it when
+driver-transfer cost could mask the computation.
 """
 
 from __future__ import annotations
@@ -18,11 +18,10 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import cdc_pubsub_spark.all_queries  # noqa: F401
+import bench
 from cdc_pubsub_spark.registry import REGISTRY
 from cdc_pubsub_spark.session import get_spark
 
@@ -89,24 +88,21 @@ def main() -> None:
             print(f"{name}: explain -> {path}", flush=True)
         if args.passes <= 0:
             if not args.explain:
-                # r15 ADVICE: without this note a --passes 0 run with no
-                # --explain produced no output at all for the op, which
+                # Without this note the op would print nothing, which
                 # reads like a hang or a missing-op bug in logs.
                 print(f"{name}: explain/timing skipped (passes=0)", flush=True)
             continue
-        walls = []
-        rows = None
-        for _ in range(args.passes):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf)
-            if args.noop:
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                rows = len(df.collect())
-            walls.append(time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
+        spark.sparkContext.setJobDescription(f"profile:{name}")
+        if args.noop:
+            walls, _ = bench.time_calls(
+                lambda: fn(spark, args.sf).write.format("noop").mode("overwrite").save(),
+                args.passes,
+                spark,
+            )
+            rows = None
+        else:
+            walls, rows = bench.measure(spark, name, args.sf, args.passes)
+        spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: min={min(walls):.3f}s walls="
             f"{[round(w, 3) for w in walls]} rows={rows}",

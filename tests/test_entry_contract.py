@@ -28,30 +28,14 @@ def test_ordering_partitions_and_priorities():
     done, _attempts, cert_round = entry._certification_state()
     assert sorted(names) == sorted(entry.REGISTRY), "must cover registry 1:1"
 
-    lead = [
-        n
-        for n in entry._SURVEY_PRIORITY
-        if n in entry.REGISTRY and n not in done
-    ]
-    recert = [n for n in entry._RECERTIFY if n in done and n not in lead]
-    phase = {n: 0 for n in lead}
-    phase.update({n: 1 for n in recert})
-    for n in names:
-        if n in phase:
-            continue
-        if n not in done:
-            # This round's own additions defer to the END so they don't
-            # displace stale-recertification slots; they lead next round.
-            phase[n] = 4 if n in entry._DEFER_TO_NEXT_ROUND else 2
-        else:
-            phase[n] = 3
+    recert = {n for n in entry._RECERTIFY if n in done}
+    phase = {n: 0 if n in recert else (2 if n in done else 1) for n in names}
     seen_phase = [phase[n] for n in names]
     assert seen_phase == sorted(seen_phase), (
-        "ordering must be lead -> recertify -> never-certified -> "
-        "certified tail -> deferred-new"
+        "ordering must be recertify -> never-certified -> certified tail"
     )
 
-    tail = [n for n in names if phase[n] == 3]
+    tail = [n for n in names if phase[n] == 2]
     rounds = [cert_round.get(n, 0) for n in tail]
     assert rounds == sorted(rounds), "certified tail must be stalest-first"
 
