@@ -99,7 +99,9 @@ def _ordered_names() -> list[str]:
     names = list(REGISTRY)
     # Never-attempted ops outrank ops that were attempted and failed;
     # among equals keep registration order (stable sort).
-    rest_new = sorted((n for n in names if n not in done), key=lambda n: attempts.get(n, 0))
+    rest_new = sorted(
+        (n for n in names if n not in done), key=lambda n: attempts.get(n, 0)
+    )
     recert = [n for n in _RECERTIFY if n in done]
     certified = [n for n in names if n in done and n not in recert]
     # Order the certified tail STALEST-FIRST (latest certification round

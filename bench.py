@@ -106,20 +106,31 @@ SF10_CLOSED_VOCAB_QUADRATIC = {
 # fixed input size. op -> input table whose row count defines throughput
 # (None = wall-only: mixed/multi-table pipelines).
 STREAM_TIER = {
-    **{
-        name: "events"
-        for name in (
-            "stream_file_source stream_tumbling stream_sliding "
-            "stream_session stream_dedup stream_late_data stream_stateful "
-            "stream_stream_join stream_stream_left_outer stream_static_join "
-            "stream_update_mode stream_cdc_upsert stream_topk_windowed "
-            "stream_windowed_distinct stream_interval_join "
-            "stream_session_join stream_session_dynamic "
-            "stream_checkpoint_resume stream_push_ingest stream_health_drain "
-            "stream_socket_ingest stream_http_ingest source_python_stream "
-            "sink_pubsub_emulated sink_exactly_once_manifest"
-        ).split()
-    },
+    "stream_file_source": "events",
+    "stream_tumbling": "events",
+    "stream_sliding": "events",
+    "stream_session": "events",
+    "stream_dedup": "events",
+    "stream_late_data": "events",
+    "stream_stateful": "events",
+    "stream_stream_join": "events",
+    "stream_stream_left_outer": "events",
+    "stream_static_join": "events",
+    "stream_update_mode": "events",
+    "stream_cdc_upsert": "events",
+    "stream_topk_windowed": "events",
+    "stream_windowed_distinct": "events",
+    "stream_interval_join": "events",
+    "stream_session_join": "events",
+    "stream_session_dynamic": "events",
+    "stream_checkpoint_resume": "events",
+    "stream_push_ingest": "events",
+    "stream_health_drain": "events",
+    "stream_socket_ingest": "events",
+    "stream_http_ingest": "events",
+    "source_python_stream": "events",
+    "sink_pubsub_emulated": "events",
+    "sink_exactly_once_manifest": "events",
     "sink_partitioned": "orders",
     "sink_compaction": "orders",
     "sink_zorder_cluster": "lineitem",
@@ -244,12 +255,16 @@ def launch_order(benched: list[str], prior: dict) -> list[str]:
 
 
 def first_round_probe(benched: list[str], prior: dict) -> list[str]:
-    """Benched ops with no row in the previous sidecar's ``queries``: a new
-    op has no probe history, and the classes the probe catches (key
-    overflow, hidden quadratic candidates) hide at sf0.1. Empty when there
-    is no previous sidecar to compare against."""
-    seen = prior.get("queries") or {}
-    return [n for n in benched if seen and n not in seen]
+    """Benched ops missing from the benched list that the last scale probe
+    recorded (``probe_selection.benched``): a new op has no probe history,
+    and the classes the probe catches (key overflow, hidden quadratic
+    candidates) hide at sf0.1. Only a probing run writes that block and
+    plain runs carry it over, so an op stays "new" until a probe has run.
+    Empty when no probe has recorded its benched list."""
+    seen = set((prior.get("probe_selection") or {}).get("benched") or ())
+    if not seen:
+        return []
+    return [n for n in benched if n not in seen]
 
 
 def sf10_set(serial: dict[str, float], probe_ops: dict[str, dict]) -> list[str]:
@@ -258,6 +273,18 @@ def sf10_set(serial: dict[str, float], probe_ops: dict[str, dict]) -> list[str]:
     head = ranked(serial)[:10]
     ratios = {n: p["ratio"] for n, p in probe_ops.items() if n not in head}
     return head + ranked(ratios)[:5]
+
+
+def sf1_headline_set(
+    benched: list[str], serial: dict[str, float], prior: dict
+) -> list[str]:
+    """The previous sidecar's headline ops that are still benched, so the
+    headline sums the same ops from one run to the next; this run's serial
+    top 20 when there is no previous headline."""
+    prev = (prior.get("sf1_headline") or {}).get("ops") or {}
+    still = set(benched)
+    kept = [n for n in prev if n in still]
+    return kept or ranked(serial)[:20]
 
 
 def probe_record(name: str, walls_by: dict[str, list], rows_by: dict[str, int]) -> dict:
@@ -300,7 +327,8 @@ def conc_tier(
         times: dict[str, float] = {}
 
         def run(name: str) -> None:
-            times[name] = round(measure(spark, name, sf_dir, clear=False)[0][0], 3)
+            walls, _ = measure(spark, name, sf_dir, clear=False)
+            times[name] = round(walls[0], 3)
 
         with ThreadPoolExecutor(max_workers=conc) as pool:
             for f in [pool.submit(run, n) for n in order]:
@@ -311,13 +339,21 @@ def conc_tier(
     return [round(w, 3) for w in walls], per_pass
 
 
-def serial_tier(spark: SparkSession, names: list[str], sf_dir: str) -> dict[str, float]:
+def serial_tier(
+    spark: SparkSession, names: list[str], sf_dir: str
+) -> dict[str, float]:
     """Uncontended single-pass seconds: separates plan cost from conc-N
     scheduler contention."""
-    return {n: round(measure(spark, n, sf_dir)[0][0], 3) for n in dict.fromkeys(names)}
+    secs: dict[str, float] = {}
+    for name in dict.fromkeys(names):
+        walls, _ = measure(spark, name, sf_dir)
+        secs[name] = round(walls[0], 3)
+    return secs
 
 
-def plan_flags(spark: SparkSession, names: list[str], scan_dir: str) -> dict[str, str]:
+def plan_flags(
+    spark: SparkSession, names: list[str], scan_dir: str
+) -> dict[str, str]:
     """Ops whose physical plan carries a risk shape that hides at sf0.1: a
     GLOBAL data-sized window or a non-broadcast nested-loop join. Plan
     shape is sf-independent, so plans are built against the smallest
@@ -332,7 +368,10 @@ def plan_flags(spark: SparkSession, names: list[str], scan_dir: str) -> dict[str
                 tables.LAZY_PLAN_MODE = False
             plan = df._jdf.queryExecution().sparkPlan().toString()
         except Exception as exc:  # plan build only — never fatal
-            print(f"bench: probe-select plan scan failed for {name}: {exc}", file=sys.stderr)
+            print(
+                f"bench: probe-select plan scan failed for {name}: {exc}",
+                file=sys.stderr,
+            )
             continue
         for line in plan.splitlines():
             if "CartesianProduct" in line:
@@ -346,7 +385,10 @@ def plan_flags(spark: SparkSession, names: list[str], scan_dir: str) -> dict[str
 
 
 def scale_probe_op(
-    spark: SparkSession, name: str, sides: tuple[tuple[str, str, int], ...], escalate: bool
+    spark: SparkSession,
+    name: str,
+    sides: tuple[tuple[str, str, int], ...],
+    escalate: bool,
 ) -> dict:
     """Probe one op on (key, dir, passes) sides; a tripped gate earns
     ESCALATE_PASSES more passes per side when ``escalate``."""
@@ -371,7 +413,9 @@ def _tree(env: str, default_sub: str, what: str, hint: str) -> str | None:
     return None
 
 
-def streaming_tier(spark: SparkSession, stream_dir: str, prior: dict) -> dict[str, dict]:
+def streaming_tier(
+    spark: SparkSession, stream_dir: str, prior: dict
+) -> dict[str, dict]:
     """Fixed-input micro-tier for the bench=False streaming/IO harnesses,
     plus a throughput delta against the previous sidecar (>30% slower is
     flagged as a triage queue, not a gate)."""
@@ -412,19 +456,29 @@ def streaming_tier(spark: SparkSession, stream_dir: str, prior: dict) -> dict[st
     }
     prev_ops = (prior.get("streaming_tier") or {}).get("ops") or {}
     deltas: dict[str, dict] = {}
+    flags: list[str] = []
     for name, entry in ops.items():
-        cur, prev = entry.get("rows_per_sec"), (prev_ops.get(name) or {}).get("rows_per_sec")
-        if isinstance(cur, (int, float)) and isinstance(prev, (int, float)) and prev > 0:
-            deltas[name] = {
-                "rows_per_sec_prev": prev,
-                "rows_per_sec_now": cur,
-                "throughput_ratio": round(cur / prev, 3),
-            }
+        cur = entry.get("rows_per_sec")
+        prev = (prev_ops.get(name) or {}).get("rows_per_sec")
+        if not (
+            isinstance(cur, (int, float))
+            and isinstance(prev, (int, float))
+            and prev > 0
+        ):
+            continue
+        ratio = round(cur / prev, 3)
+        deltas[name] = {
+            "rows_per_sec_prev": prev,
+            "rows_per_sec_now": cur,
+            "throughput_ratio": ratio,
+        }
+        if ratio < 0.7:
+            flags.append(name)
     if deltas:
         out["streaming_tier_delta"] = {
             "vs": "previous committed BENCH_DETAIL.json",
             "regression_gate": "throughput_ratio < 0.7 flags",
-            "flagged": sorted(n for n, d in deltas.items() if d["throughput_ratio"] < 0.7),
+            "flagged": sorted(flags),
             "ops": deltas,
         }
     return out
@@ -448,11 +502,17 @@ def host_control(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         .agg(F.sum("v"))
         .selectExpr("count(*) AS n", "sum(`sum(v)`) AS s")
         .collect(),
-        "scan_sec": lambda: spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+        "scan_sec": lambda: spark.read.parquet(
+            os.path.join(sf_dir, "lineitem.parquet")
+        )
         .selectExpr("sum(l_extendedprice)", "count(*)")
         .collect(),
     }
-    return {k: round(min(time_calls(fn, PASSES, spark)[0]), 3) for k, fn in probes.items()}
+    out: dict[str, float] = {}
+    for key, fn in probes.items():
+        walls, _ = time_calls(fn, PASSES, spark)
+        out[key] = round(min(walls), 3)
+    return out
 
 
 def host_drift(control: dict[str, float], prior: dict) -> dict | None:
@@ -486,14 +546,19 @@ def paired_duckdb(sf_dir: str, wall: float) -> dict:
 
     con = duck_connection(sf_dir)
     con.execute("SET threads TO 1")
-    orcs = [REGISTRY[n].oracle for n in sorted(REGISTRY) if REGISTRY[n].bench and REGISTRY[n].oracle]
+    orcs = [
+        REGISTRY[n].oracle
+        for n in sorted(REGISTRY)
+        if REGISTRY[n].bench and REGISTRY[n].oracle
+    ]
 
     def run_all() -> None:
         for q in orcs:
             con.execute(q).fetchall()
 
     run_all()  # warm pass: page cache + catalog, like Spark's
-    duck_wall = round(time_calls(run_all, 1)[0][0], 3)
+    walls, _ = time_calls(run_all, 1)
+    duck_wall = round(walls[0], 3)
     con.close()
     return {
         "serial_wall_sec": duck_wall,
@@ -518,20 +583,24 @@ def full_tiers(
     out: dict = {}
     slowest = ranked(serial)[:10]
     probe_ops: dict[str, dict] = {}
-    scale_dir = _tree("SPARK_GRAFT_SCALE_DIR", "sf1", "scale probe", "scripts/gen_scale_probe.py")
+    scale_dir = _tree(
+        "SPARK_GRAFT_SCALE_DIR", "sf1", "scale probe", "scripts/gen_scale_probe.py"
+    )
     if scale_dir:
         # 10x probe: the 10 slowest serial ops, every op with a risky plan
-        # shape, and every op new since the previous sidecar.
+        # shape, and every op benched since the last probe.
         scan_dir = WARM_DIR if os.path.isdir(WARM_DIR) else sf_dir
         flagged = plan_flags(spark, benched, scan_dir)
         first_round = first_round_probe(benched, prior)
+        sides = (("sf01", sf_dir, PASSES), ("sf1", scale_dir, PASSES))
         for name in dict.fromkeys(slowest + sorted(flagged) + first_round):
-            probe_ops[name] = scale_probe_op(
-                spark, name, (("sf01", sf_dir, PASSES), ("sf1", scale_dir, PASSES)), True
-            )
+            probe_ops[name] = scale_probe_op(spark, name, sides, True)
         out["scale_probe"] = {
             "data_multiplier": 10,
-            "gate": "ratio_per_output_row for ops in output_quadratic; raw ratio otherwise",
+            "gate": (
+                "ratio_per_output_row for ops in output_quadratic; "
+                "raw ratio otherwise"
+            ),
             "output_quadratic": sorted(OUTPUT_QUADRATIC),
             "ops": probe_ops,
         }
@@ -539,10 +608,13 @@ def full_tiers(
             "serial_top10": slowest,
             "plan_flagged": flagged,
             "first_round": first_round,
+            # What the next probe's first_round is measured against.
+            "benched": benched,
         }
-        # sf1 headline: serial walls of the 20 heaviest serial ops at the
+        # sf1 headline: serial walls of a fixed set of heavy ops at the
         # 10x tree, where plan differences dominate the scheduling floor.
-        sf1_times = serial_tier(spark, ranked(serial)[:20], scale_dir)
+        headline = sf1_headline_set(benched, serial, prior)
+        sf1_times = serial_tier(spark, headline, scale_dir)
         out["sf1_headline"] = {
             "data_multiplier": 10,
             "serial_wall_sec": round(sum(sf1_times.values()), 3),
@@ -563,9 +635,8 @@ def full_tiers(
             if name in SF10_CLOSED_VOCAB_QUADRATIC:
                 probe10[name] = {"declared": SF10_CLOSED_VOCAB_QUADRATIC[name]}
             else:
-                probe10[name] = scale_probe_op(
-                    spark, name, (("sf01", sf_dir, PASSES), ("sf10", scale10_dir, 1)), False
-                )
+                sides = (("sf01", sf_dir, PASSES), ("sf10", scale10_dir, 1))
+                probe10[name] = scale_probe_op(spark, name, sides, False)
         out["scale_probe_sf10"] = {
             "data_multiplier": 100,
             "gate": (
@@ -576,7 +647,9 @@ def full_tiers(
             ),
             "ops": probe10,
         }
-    stream_dir = os.environ.get("SPARK_GRAFT_STREAM_SF_DIR", "/root/testdata/sf0.01")
+    stream_dir = os.environ.get(
+        "SPARK_GRAFT_STREAM_SF_DIR", "/root/testdata/sf0.01"
+    )
     out.update(streaming_tier(spark, stream_dir, prior))
     return out
 
@@ -600,7 +673,9 @@ def main() -> None:
     # Untimed warm-up (BASELINE.md §2): the full benched set once at
     # sf0.001 — identical plans, 1000x less data — so codegen and JIT
     # happen outside the timed window.
-    if os.path.isdir(WARM_DIR) and os.path.abspath(WARM_DIR) != os.path.abspath(sf_dir):
+    if os.path.isdir(WARM_DIR) and os.path.abspath(WARM_DIR) != os.path.abspath(
+        sf_dir
+    ):
 
         def warm(name: str) -> None:
             try:
@@ -643,12 +718,16 @@ def main() -> None:
     # the sidecar (`git hash-object bench.py`).
     with open(os.path.abspath(__file__), "rb") as fh:
         body = fh.read()
-    detail["bench_py_sha"] = hashlib.sha1(b"blob %d\0" % len(body) + body).hexdigest()
+    detail["bench_py_sha"] = hashlib.sha1(
+        b"blob %d\0" % len(body) + body
+    ).hexdigest()
     if full:
         spark.stop()
         detail["paired_duckdb"] = paired_duckdb(sf_dir, wall)
 
-    carried = [k for k in PRESERVABLE if k not in detail and isinstance(prior.get(k), dict)]
+    carried = [
+        k for k in PRESERVABLE if k not in detail and isinstance(prior.get(k), dict)
+    ]
     for k in carried:
         detail[k] = prior[k]
     if carried:

@@ -94,11 +94,10 @@ def main() -> None:
             continue
         spark.sparkContext.setJobDescription(f"profile:{name}")
         if args.noop:
-            walls, _ = bench.time_calls(
-                lambda: fn(spark, args.sf).write.format("noop").mode("overwrite").save(),
-                args.passes,
-                spark,
-            )
+            def noop_write() -> None:
+                fn(spark, args.sf).write.format("noop").mode("overwrite").save()
+
+            walls, _ = bench.time_calls(noop_write, args.passes, spark)
             rows = None
         else:
             walls, rows = bench.measure(spark, name, args.sf, args.passes)

@@ -21,10 +21,28 @@ def test_launch_order_without_prior_is_registry_order():
     assert bench.launch_order(BENCHED, {}) == BENCHED
 
 
-def test_first_round_probe_is_ops_missing_from_prior_queries():
-    assert bench.first_round_probe(BENCHED, PRIOR) == ["e"]
-    # no previous sidecar: no history to compare against, probe nothing
+def test_first_round_probe_is_ops_missing_from_last_probed_list():
+    # A plain run rewrites "queries" for every benched op, so it cannot
+    # tell a new op; only the probe's own benched list can.
+    prior = {
+        "queries": {n: 0.1 for n in BENCHED},
+        "probe_selection": {"benched": ["a", "b", "c", "zz_gone"]},
+    }
+    assert bench.first_round_probe(BENCHED, prior) == ["d", "e"]
+    # no probe has recorded its benched list: no history, probe nothing
+    assert bench.first_round_probe(BENCHED, PRIOR) == []
     assert bench.first_round_probe(BENCHED, {}) == []
+
+
+def test_sf1_headline_keeps_previous_ops_still_benched():
+    serial = {"e": 9.0, "d": 8.0, "a": 0.1}
+    prior = {"sf1_headline": {"ops": {"b": 3.0, "zz_gone": 5.0, "c": 4.0}}}
+    # the previous set, not this run's noisy serial ranking
+    assert bench.sf1_headline_set(BENCHED, serial, prior) == ["b", "c"]
+    # no previous headline (or none of it still benched): serial top 20
+    assert bench.sf1_headline_set(BENCHED, serial, {}) == ["e", "d", "a"]
+    gone = {"sf1_headline": {"ops": {"zz_gone": 5.0}}}
+    assert bench.sf1_headline_set(BENCHED, serial, gone) == ["e", "d", "a"]
 
 
 def test_sf10_set_is_serial_head_plus_highest_probe_ratios():
@@ -45,11 +63,15 @@ def test_sf10_set_is_serial_head_plus_highest_probe_ratios():
 
 def test_probe_record_ratios():
     oq = next(iter(sorted(bench.OUTPUT_QUADRATIC)))
-    per = bench.probe_record(oq, {"sf01": [2.0, 1.0], "sf1": [4.0]}, {"sf01": 10, "sf1": 100})
+    per = bench.probe_record(
+        oq, {"sf01": [2.0, 1.0], "sf1": [4.0]}, {"sf01": 10, "sf1": 100}
+    )
     assert per["sf01_sec"] == 1.0 and per["sf1_walls"] == [4.0]
     assert per["ratio"] == 4.0
     assert per["ratio_per_output_row"] == 0.4
-    plain = bench.probe_record("plain_op", {"sf01": [1.0], "sf1": [3.0]}, {"sf01": 1, "sf1": 1})
+    plain = bench.probe_record(
+        "plain_op", {"sf01": [1.0], "sf1": [3.0]}, {"sf01": 1, "sf1": 1}
+    )
     assert "ratio_per_output_row" not in plain
 
 
@@ -79,12 +101,12 @@ def test_tripped_output_quadratic_op_escalates(monkeypatch):
     oq = next(iter(sorted(bench.OUTPUT_QUADRATIC)))
     calls = []
     # per-row ratio (10/10) / (1/100) = 100 > gate
-    monkeypatch.setattr(
-        bench, "measure", _fake_measure({"small": 1.0, "big": 10.0}, {"small": 100, "big": 10}, calls)
-    )
+    fake = _fake_measure({"small": 1.0, "big": 10.0}, {"small": 100, "big": 10}, calls)
+    monkeypatch.setattr(bench, "measure", fake)
     per = bench.scale_probe_op(None, oq, SIDES, escalate=True)
     assert per["escalated_passes"] == bench.ESCALATE_PASSES
-    assert len(per["sf01_walls"]) == len(per["sf1_walls"]) == 2 + bench.ESCALATE_PASSES
+    n_walls = 2 + bench.ESCALATE_PASSES
+    assert len(per["sf01_walls"]) == len(per["sf1_walls"]) == n_walls
     assert calls == [("small", 2), ("big", 2), ("small", 2), ("big", 2)]
 
 
@@ -92,9 +114,9 @@ def test_output_quadratic_op_in_gate_does_not_escalate(monkeypatch):
     oq = next(iter(sorted(bench.OUTPUT_QUADRATIC)))
     calls = []
     # raw ratio 10 trips a plain op, but per row (10/1000)/(1/100) = 1.0
-    monkeypatch.setattr(
-        bench, "measure", _fake_measure({"small": 1.0, "big": 10.0}, {"small": 100, "big": 1000}, calls)
-    )
+    rows = {"small": 100, "big": 1000}
+    fake = _fake_measure({"small": 1.0, "big": 10.0}, rows, calls)
+    monkeypatch.setattr(bench, "measure", fake)
     per = bench.scale_probe_op(None, oq, SIDES, escalate=True)
     assert "escalated_passes" not in per and len(calls) == 2
     plain = bench.scale_probe_op(None, "plain_op", SIDES, escalate=True)
@@ -103,9 +125,9 @@ def test_output_quadratic_op_in_gate_does_not_escalate(monkeypatch):
 
 def test_escalation_off_for_sf10_tier(monkeypatch):
     calls = []
-    monkeypatch.setattr(
-        bench, "measure", _fake_measure({"small": 1.0, "big": 500.0}, {"small": 1, "big": 1}, calls)
-    )
-    per = bench.scale_probe_op(None, "plain_op", (("sf01", "small", 2), ("sf10", "big", 1)), escalate=False)
+    fake = _fake_measure({"small": 1.0, "big": 500.0}, {"small": 1, "big": 1}, calls)
+    monkeypatch.setattr(bench, "measure", fake)
+    sides = (("sf01", "small", 2), ("sf10", "big", 1))
+    per = bench.scale_probe_op(None, "plain_op", sides, escalate=False)
     assert "escalated_passes" not in per and per["ratio"] == 500.0
     assert calls == [("small", 2), ("big", 1)]
