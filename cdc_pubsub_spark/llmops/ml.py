@@ -219,6 +219,7 @@ def ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             - int(math.floor(8.0 * float(row[f"g{j}"]) / (float(n) * 1000.0) + 0.5))
             for j in range(_NF)
         ]
+    feat.unpersist()
     wref = [str(w) for w in wq]
     scored = feat.selectExpr("y", f"{_z_expr(wref)} AS z").selectExpr(
         "y", f"CASE WHEN {_P_EXPR} > 0.5e0 THEN 1e0 ELSE 0e0 END AS yhat"
@@ -242,9 +243,7 @@ def ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             " / CAST(count(*) AS DOUBLE) * 10000 + 0.5) / 10000"
         ).alias("accuracy"),
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, feat)
+    return out
 
 
 _BPE_ROUNDS = 10
@@ -918,14 +917,13 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
     )
-    train_tok = tok.filter(F.col("doc_id") % 5 != 0).persist()
+    train_tok = tok.filter(F.col("doc_id") % 5 != 0)
     vocab = (
         train_tok.groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "w")
         .limit(_NB_VOCAB_K)
         .select("w")
-        .persist()
     )
     vn = vocab.agg(F.count(F.lit(1)).cast("bigint").alias("v"))
     classes = (
@@ -1007,9 +1005,7 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lang", "pred_lang", "n_docs", F.col("v").alias("vocab_size"))
         .orderBy("lang", "pred_lang")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, train_tok, vocab)
+    return out
 
 
 # --- depth-2 CART -----------------------------------------------------------
@@ -1276,6 +1272,7 @@ def ml_decision_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s", "f", "t")
         .collect()
     )
+    tr.unpersist()
     child = {int(r["s"]): (int(r["f"]), int(r["t"])) for r in w2rows}
     cf = {s: child.get(s, (-1, 15)) for s in (0, 1)}
 
@@ -1320,7 +1317,6 @@ def ml_decision_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
             "      - coalesce(n_pos_test, CAST(0 AS BIGINT)) END"
             " AS n_correct",
         )
-        .persist()
     )
     acc = joined.agg(
         F.expr(
@@ -1348,9 +1344,7 @@ def ml_decision_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("s", "s2")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, tr, joined)
+    return out
 
 
 # Planted monotone classification fixture for the ROC evaluator: the
@@ -2296,6 +2290,7 @@ def ml_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
                            int(row["smx"]))
         mu1 = (2 * srx + sr) // (2 * sr)
         mu2 = (2 * smx + (1000000 * n - sr)) // (2 * (1000000 * n - sr))
+    xs.unpersist()
     fin = (
         xs.selectExpr("x", f"{_gmm_resp_sql(str(mu1), str(mu2))} AS rq")
         .agg(*_aggs(mu1, mu2))
@@ -2315,9 +2310,7 @@ def ml_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         "floor(CAST(1000000 * n - sr AS DOUBLE)"
         " / (1000000e0 * CAST(n AS DOUBLE)) * 10000 + 0.5) / 10000 AS w2",
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, xs)
+    return out
 
 
 # --- ml_isotonic_calibration: PAV via the exact minimax formula ----------
@@ -2740,6 +2733,8 @@ def ml_feature_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("feature_idx")
     from cdc_pubsub_spark.tables import finalize_cached
 
+    # Cache kept: the accuracy pass re-reads feat after the loop;
+    # recomputing the text features measured 2.74 s vs 2.56 s at sf0.1.
     return finalize_cached(out, feat)
 
 
@@ -2989,7 +2984,8 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # rows_in is already released above; the finalize materializes
         # `out` off the tiny cells checkpoint so the checkpoint blocks
-        # are safe to drop in the same finally.
+        # are safe to drop in the same finally. Cache kept: lazy
+        # measured 2.91 s vs 2.38 s at sf0.1 (local[4]).
         return finalize_cached(out, rows_in)
     finally:
         release_checkpoint(cells)
@@ -3366,7 +3362,6 @@ def ml_classification_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.selectExpr("label AS t", f"{_CLS_PRED_SQL} AS p")
         .groupBy("t", "p")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()
     )
     classes = (
         cm.selectExpr("t AS cls").union(cm.selectExpr("p AS cls")).distinct()
@@ -3430,9 +3425,7 @@ def ml_classification_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("label")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, cm)
+    return out
 
 
 # --- r12 growth: banded gains/lift table ------------------------------------
@@ -4796,7 +4789,7 @@ def ml_target_encoding_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_fold = li.groupBy("cat", "fold").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_f"),
         F.sum("y").cast("bigint").alias("s_f"),
-    ).persist()  # domain-sized (cat x fold); per_cat derives from it
+    )
     per_cat = per_fold.groupBy("cat").agg(
         F.sum("n_f").cast("bigint").alias("n_c"),
         F.sum("s_f").cast("bigint").alias("s_c"),
@@ -4818,9 +4811,7 @@ def ml_target_encoding_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cat", "fold")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, per_fold)
+    return out
 
 
 # --- r13 growth: adversarial-validation AUC --------------------------------

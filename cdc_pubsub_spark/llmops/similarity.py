@@ -2337,7 +2337,7 @@ def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         " aggregate(sequence(0, 63), 0L, (acc, ii) ->"
         "   acc + element_at(s, jj * 64 + ii + 1)"
         "         * element_at(xq, ii + 1))) AS y",
-    ).persist()
+    )
     a, b = proj.alias("a"), proj.alias("b")
     pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).selectExpr(
         "a.vec_id AS va",
@@ -2375,9 +2375,7 @@ def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_within_2x"),
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, proj)
+    return out
 
 
 @register(
@@ -2463,7 +2461,7 @@ def knn_regression_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         "xq",
         "CAST(element_at(xq, 1) + 2 * element_at(xq, 2)"
         " - element_at(xq, 3) AS BIGINT) AS y",
-    ).persist()
+    )
     q = tgt.filter(F.col("vec_id") < 30).selectExpr(
         "vec_id AS qid", "xq AS qx"
     )
@@ -2516,6 +2514,4 @@ def knn_regression_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("vec_id")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, tgt)
+    return out

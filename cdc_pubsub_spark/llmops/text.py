@@ -1352,7 +1352,6 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     nonstop = (
         words.filter(~F.col("w").isin(*_RAKE_STOP) & (F.col("w") != ""))
         .withColumn("island", F.col("pos") - F.row_number().over(wd))
-        .persist()
     )
     phrases = nonstop.groupBy("doc_id", "island").agg(
         F.array_join(
@@ -1364,11 +1363,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("phrase"),
         F.count(F.lit(1)).cast("bigint").alias("plen"),
     )
-    # member = (word occurrence x its phrase) feeds BOTH the word-stat
-    # aggregate and the phrase-score join; without the persist the
-    # phrase window+groupBy and the member join re-executed per leg
-    # (the r14 multi-leg-recompute lesson).
-    member = nonstop.join(phrases, ["doc_id", "island"]).persist()
+    member = nonstop.join(phrases, ["doc_id", "island"])
     wstats = member.groupBy("w").agg(
         F.count(F.lit(1)).cast("bigint").alias("freq"),
         F.sum("plen").cast("bigint").alias("deg"),
@@ -1396,9 +1391,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("rake_score"), "phrase")
         .limit(20)
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, nonstop, member)
+    return out
 
 
 _CURR_Q_SQL = (
@@ -1491,7 +1484,7 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_CURR_PHASE_SQL.replace('q', f'({_CURR_Q_SQL})')} AS phase",
     ).withColumn("bkt", F.substring("h", 1, 2))
     wloc = Window.partitionBy("phase", "bkt").orderBy("h", "doc_id")
-    local = phased.withColumn("rn", F.row_number().over(wloc)).persist()
+    local = phased.withColumn("rn", F.row_number().over(wloc))
     woff = Window.partitionBy("phase").orderBy("bkt").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1532,9 +1525,7 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("phase")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, local)
+    return out
 
 
 _PMI_LIFT = (
@@ -2068,7 +2059,6 @@ def text_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         bg.filter("doc_id % 4 = 0")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()
     )
     cu = cbg.groupBy("w1").agg(
         F.sum("c").cast("bigint").alias("cw1"),
@@ -2117,9 +2107,7 @@ def text_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, cbg)
+    return out
 
 
 # --- r12 bloom decontamination promotion (from staging/r12 at round 12) ---
@@ -3447,7 +3435,6 @@ def text_rouge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n", F.xxhash64("g", "n").alias("g"))
         .groupBy("doc_id", "g", "n")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()
     )
     totals = grams.groupBy("doc_id", "n").agg(
         F.sum("c").cast("bigint").alias("tot")
@@ -3528,9 +3515,7 @@ def text_rouge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source", "kind", "gram_n")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, grams)
+    return out
 
 
 # --- r13 growth: source vocabulary similarity matrix ------------------------
@@ -3587,7 +3572,6 @@ def text_source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents")
         .select("source", F.explode(F.split("text", " ")).alias("w"))
         .distinct()
-        .persist()
     )
     sizes = vocab.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("nv")
@@ -3619,6 +3603,4 @@ def text_source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source_a", "source_b")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, vocab)
+    return out

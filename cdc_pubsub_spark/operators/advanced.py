@@ -1529,6 +1529,7 @@ def profile_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = cont.agg(F.sum("o").cast("bigint").alias("n"))
     nr = rt.count()
     nc = ct.count()
+    cont.unpersist()
     e = (
         "CAST(rtot AS DOUBLE) * CAST(ctot AS DOUBLE) / CAST(n AS DOUBLE)"
     )
@@ -1549,9 +1550,7 @@ def profile_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("q").cast("double") / 1000000).alias("chi2"),
         (F.sum("q").cast("double") / 1000000 > 15.507).alias("reject_95_df8"),
     ).withColumnRenamed("n", "n_orders")
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, cont)
+    return out
 
 
 @register(
@@ -1722,7 +1721,7 @@ def profile_data_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_key = kv.groupBy("key_name", "k").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
-    ).persist()
+    )
     wk = Window.partitionBy("key_name").orderBy(F.desc("c"), "k")
     hot = (
         per_key.withColumn("rn", F.row_number().over(wk))
@@ -1755,9 +1754,7 @@ def profile_data_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("key_name")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, per_key)
+    return out
 
 
 # --- profile_cramers_v: categorical association matrix -------------------
@@ -1863,13 +1860,12 @@ def profile_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderstatus", "o_orderpriority", "dw")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .persist()
     )
     # r15 optimization: each pair's marginals (rtot/ctot) and scalars
     # (n, r_levels, c_levels) were separate lazy aggregates re-attached
     # with ~9 broadcast joins — every broadcast build is its own
     # mini-job at materialization, so the 3-pair matrix cost ~10 small
-    # jobs (serial 2.3 s at sf0.1 for 245 cached rows). They are now
+    # jobs (serial 2.3 s at sf0.1 for 245 cells). They are now
     # WINDOW functions over the per-pair contingency relation (the
     # ml_winsorized device): rtot = sum(o) over (pair-constant, r),
     # ctot over c, the scalars over the whole ≤245-row pair slice —
@@ -1937,9 +1933,7 @@ def profile_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out.orderBy("pair"), cells)
+    return out.orderBy("pair")
 
 
 @register(
@@ -2109,7 +2103,6 @@ def profile_column_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             Window.partitionBy("col_name").orderBy("h")))
         .filter(F.col("rk") <= _COLFP_K)
         .drop("rk")
-        .persist()
     )
     sizes = kept.groupBy("col_name").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
@@ -2147,9 +2140,7 @@ def profile_column_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("col_a", "col_b")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, kept)
+    return out
 
 
 # Candidate keys probed by the discovery pass: (label, table, cols).

@@ -17,7 +17,7 @@ from pyspark.sql.window import Window
 
 from cdc_pubsub_spark.functions.rounding import r2, r4
 from cdc_pubsub_spark.registry import register
-from cdc_pubsub_spark.tables import finalize_cached, load
+from cdc_pubsub_spark.tables import load
 
 
 @register(
@@ -1042,7 +1042,7 @@ def agg_kmv_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
     ).cast("bigint")
-    hashes = events.select("event_type", h.alias("h")).distinct().persist()
+    hashes = events.select("event_type", h.alias("h")).distinct()
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("event_type").orderBy("h")
@@ -1057,7 +1057,7 @@ def agg_kmv_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-k-smallest shape the sketch contract promises — instead of
     # sorting the whole distinct-hash relation through one partition
     # per group. n_h (needed only for the <k exact fallback) comes
-    # from a windowless groupBy count on the same cached relation.
+    # from a windowless groupBy count on the same distinct-hash relation.
     kth = (
         hashes.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 64)
@@ -1089,7 +1089,7 @@ def agg_kmv_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    return finalize_cached(out, hashes)
+    return out
 
 
 @register(
@@ -1274,13 +1274,11 @@ def agg_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.filter(F.col("event_type") == "click")
         .select(h.alias("h"))
         .distinct()
-        .persist()
     )
     hb = (
         events.filter(F.col("event_type") == "view")
         .select(h.alias("h"))
         .distinct()
-        .persist()
     )
 
     def kth(df):
@@ -1301,7 +1299,7 @@ def agg_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ka = kth(ha).select(F.col("hk").alias("hka"))
     kb = kth(hb).select(F.col("hk").alias("hkb"))
-    un = ha.unionByName(hb).distinct().persist()
+    un = ha.unionByName(hb).distinct()
     ku = (
         kth(un)
         .select(F.col("hk").alias("hku"))
@@ -1370,7 +1368,7 @@ def agg_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             "abs(e_inter - exact_inter) / exact_inter < 0.35 AS inter_ok",
         )
     )
-    return finalize_cached(out, ha, hb, un)
+    return out
 
 
 # --- KMV epoch rollup (promoted from staging/r12 at round 12) ----------
@@ -1485,7 +1483,7 @@ def agg_kmv_epoch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_KMV_HASH_SPARK} AS h",
         "user_id",
     )
-    hashes = ev.select("epoch", "h").distinct().persist()
+    hashes = ev.select("epoch", "h").distinct()
     w = Window.partitionBy("epoch").orderBy("h")
     sketch = (
         hashes.withColumn("rk", F.row_number().over(w))
@@ -1546,7 +1544,7 @@ def agg_kmv_epoch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("epoch", "sketch_size", "est_users", "exact_users")
         .orderBy("epoch")
     )
-    return finalize_cached(out, hashes)
+    return out
 
 
 # --- r12 growth: linear counting sketch -------------------------------------

@@ -23,8 +23,7 @@ from pyspark.sql.window import Window
 
 from cdc_pubsub_spark.functions.rounding import r2, r4
 from cdc_pubsub_spark.registry import register
-from cdc_pubsub_spark import tables
-from cdc_pubsub_spark.tables import finalize_cached, load, release_checkpoint
+from cdc_pubsub_spark.tables import load
 
 _Q3_CUTOFF = "1998-03-15"
 _Q10_START = "1996-01-01"
@@ -1097,17 +1096,15 @@ def basket_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fact-sized shuffle total (r14; was distinct + persist of the
     # (order, brand) pairs + a self-join — three fact-sized exchanges):
     # the broadcast part join flows straight into groupBy(order) with
-    # collect_set doing the per-basket brand dedup map-side, and the
-    # persisted frame is the ~4x smaller per-order array table that
-    # every downstream consumer (order count, singles, pair
-    # enumeration) derives from locally.
+    # collect_set doing the per-basket brand dedup map-side, and every
+    # downstream consumer (order count, singles, pair enumeration)
+    # derives from the ~4x smaller per-order array table.
     grouped = (
         load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_orderkey")
         .agg(F.expr("sort_array(collect_set(p_brand))").alias("bs"))
-        .persist()
     )
     n = F.broadcast(
         grouped.agg(F.count(F.lit(1)).cast("double").alias("n_orders"))
@@ -1149,7 +1146,7 @@ def basket_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_both"), "brand_a", "brand_b")
         .limit(15)
     )
-    return finalize_cached(out, grouped)
+    return out
 
 
 @register(
@@ -1370,11 +1367,9 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("d"),
         "user_id",
     )
-    # persist: two consumers (dau + the boundary-delta window) would
-    # each re-run the events scan and the distinct shuffle otherwise;
     # day_users is ALREADY distinct on (d, user), so the per-day count
     # is a plain count, not a second dedup pass.
-    day_users = ev.distinct().persist()
+    day_users = ev.distinct()
     dau = day_users.groupBy(F.col("d").alias("day_idx")).agg(
         F.count(F.lit(1)).alias("dau")
     )
@@ -1421,7 +1416,7 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("dau").isNotNull())
     )
     out = spine.orderBy("day_idx")
-    return finalize_cached(out, day_users)
+    return out
 
 
 @register(
@@ -2993,7 +2988,6 @@ def orders_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cents")
         )
-        .persist()
     )
     a, b = daily.alias("a"), daily.alias("b")
     s = a.join(b, F.col("b.d") > F.col("a.d")).agg(
@@ -3041,9 +3035,7 @@ def orders_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"abs(({zn}) / ({vd})) > 1.96 AS trend_95",
         )
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, daily)
+    return out
 
 
 # Cutoff edges per axis: c{k} = smallest bin whose cumulative count
@@ -3173,16 +3165,16 @@ def orders_rfm_atscale(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(
             F.expr("monetary_cents div 100000"), F.lit(9999).cast("bigint")
         ).alias("m_bin"),
-    ).persist()
+    )
     # r16 (the profile_cramers_v device): the three axis cutoffs were
     # three separate histogram+window+crossJoin(broadcast n) legs — each
-    # its own cache pass, exchange and broadcast build, with the n_cust
+    # its own pass over rb, exchange and broadcast build, with the n_cust
     # scalar re-aggregated per leg. One stack() unpivot feeds ONE
     # (axis, bin) histogram; the cumulative AND the per-axis total ride
     # the same ax-partitioned Window exec (n as the unbounded frame —
     # every rb row emits exactly one bin per axis, so the per-axis sum
     # equals n_cust); the 12 cutoffs collapse in one aggregate row.
-    # Cache passes 7 -> 3, broadcast builds 4 -> 1. Cutoff integers are
+    # Passes over rb 7 -> 3, broadcast builds 4 -> 1. Cutoff integers are
     # unchanged: identical per-axis histograms, identical cum order.
     axes = rb.selectExpr(
         "stack(3, 'r', r_bin, 'f', f_bin, 'm', m_bin) AS (ax, bin)"
@@ -3230,7 +3222,7 @@ def orders_rfm_atscale(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("r_q", "f_q", "m_q")
     )
-    return finalize_cached(out, rb)
+    return out
 
 
 _EWMA_FOLD = "0.3e0 * CAST(x AS DOUBLE) + 0.7e0 * CAST(acc AS DOUBLE)"
@@ -3407,20 +3399,16 @@ def orders_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fact-sized shuffle total (r14; was distinct + persist of the
     # (order, brand) pairs + a self-join): collect_set dedups brands
     # per basket inside the single groupBy; order count, singles, and
-    # the directed pair enumeration all derive from the persisted
-    # per-order array frame (same shape as basket_brand_pairs).
+    # the directed pair enumeration all derive from the per-order array
+    # frame (same shape as basket_brand_pairs).
     grouped = (
         li.join(part, li.l_partkey == F.col("p_partkey"))
         .groupBy("l_orderkey")
         .agg(F.expr("sort_array(collect_set(p_brand))").alias("bs"))
-        .persist()
     )
-    # r16: n_orders and the singles table shared two separate cache
-    # passes (plus per-broadcast recomputes when the sa/sb builds don't
-    # canonicalize together). ONE pass now counts both — each basket
-    # emits its brands plus a NULL marker element, so the NULL group's
-    # count is exactly n_orders — and the ~|brands|+1-row result is
-    # checkpointed once; n, sa and sb all broadcast off the leaf.
+    # ONE pass counts n_orders and the singles table: each basket emits
+    # its brands plus a NULL marker element, so the NULL group's count
+    # is exactly n_orders.
     counts = (
         grouped.selectExpr(
             "explode(concat(bs, array(CAST(NULL AS STRING)))) AS p_brand"
@@ -3428,8 +3416,6 @@ def orders_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_single"))
     )
-    if not tables.LAZY_PLAN_MODE:
-        counts = counts.localCheckpoint(eager=True)
     n = counts.filter("p_brand IS NULL").selectExpr(
         "n_single AS n_orders"
     )
@@ -3488,10 +3474,7 @@ def orders_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("confidence"), "antecedent", "consequent")
         .limit(15)
     )
-    try:
-        return finalize_cached(out, grouped)
-    finally:
-        release_checkpoint(counts)
+    return out
 
 
 @register(
@@ -3592,8 +3575,6 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents")
     )
     wma = Window.orderBy("day_idx").rowsBetween(-3, 3)
-    from cdc_pubsub_spark.tables import finalize_cached
-
     detr = (
         daily.select(
             "day_idx",
@@ -3608,7 +3589,6 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             " - CAST(fr_cents AS DOUBLE) / (100 * CAST(fr_n AS DOUBLE)))"
             " * 100 + 0.5) AS BIGINT) AS d_centi",
         )
-        .persist()
     )
     seas = detr.groupBy("dow").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
@@ -3655,7 +3635,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("dow")
     )
-    return finalize_cached(out, detr)
+    return out
 
 
 @register(
@@ -4529,7 +4509,6 @@ def events_hotspot_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         pts.groupBy("gx", "gy")
         .agg(F.sum("cents").cast("bigint").alias("v"))
-        .persist()
     )
     stats = cells.agg(
         F.count(F.lit(1)).cast("bigint").alias("nc"),
@@ -4578,9 +4557,7 @@ def events_hotspot_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("gstar").desc(), "gx", "gy")
         .limit(15)
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, cells)
+    return out
 
 
 @register(
@@ -4653,7 +4630,6 @@ def events_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("day_idx"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()
     )
     cal = daily.agg(
         F.countDistinct("day_idx").cast("bigint").alias("n_days")
@@ -4673,9 +4649,7 @@ def events_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"floor((sqrt({var}) - {mu}) / (sqrt({var}) + {mu})"
         " * 10000 + 0.5) / 10000 AS burstiness",
     ).orderBy("event_type")
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, daily)
+    return out
 
 
 @register(
@@ -5088,7 +5062,6 @@ def events_alert_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cents")
         )
-        .persist()
     )
     base = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
@@ -5122,9 +5095,7 @@ def events_alert_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("grp")
         .orderBy("event_type", "start_day")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, daily)
+    return out
 
 
 # SPRT literals for H0: p = 0.10 vs H1: p = 0.12 at alpha = beta = 0.05,
@@ -5234,7 +5205,6 @@ def events_ab_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("x"),
         )
-        .persist()
     )
     incs = daily.selectExpr(
         "variant",
@@ -5257,7 +5227,7 @@ def events_ab_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" WHEN cum_micro <= CAST(floor({_SPRT_B} * 1000000 + 0.5)"
         " AS BIGINT) THEN 'accept_h0'"
         " ELSE 'continue' END AS verdict",
-    ).persist()
+    )
     first_cross = (
         decided.filter(F.col("verdict") != "continue")
         .groupBy("variant")
@@ -5295,9 +5265,7 @@ def events_ab_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("variant")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, daily, decided)
+    return out
 
 
 _ESD_ROUNDS = 4
@@ -5414,6 +5382,7 @@ def events_anomaly_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         removed.append((k, top["day_idx"], top["cents"], top["z"]))
         cur = cur.filter(F.col("day_idx") != int(top["day_idx"]))
+    daily.unpersist()
     rows = [
         (k, d, c, float(z)) for k, d, c, z in removed
     ]
@@ -5426,9 +5395,7 @@ def events_anomaly_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
         "floor(z_raw * 10000 + 0.5) / 10000 AS z",
         "z_raw > 3e0 AS is_significant",
     ).orderBy("esd_round")
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, daily)
+    return out
 
 
 # z-quantile literals for the power calculation (alpha = 0.05 two-sided,
@@ -5648,7 +5615,6 @@ def orders_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("rev")
         )
-        .persist()
     )
     tot = partrev.agg(F.sum("rev").cast("bigint").alias("trev"))
     bkt = partrev.groupBy(
@@ -5710,9 +5676,7 @@ def orders_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("abc_class", "xyz_class")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, partrev)
+    return out
 
 
 @register(
@@ -5771,7 +5735,6 @@ def events_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame
             "user_id",
         )
         .distinct()
-        .persist()
     )
     offs = spark.sql(
         "SELECT * FROM (VALUES (0), (1), (2), (3), (4), (5), (6))"
@@ -5797,9 +5760,7 @@ def events_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame
     out = windowed.selectExpr(
         "target_day AS day_idx", "users_1d", "users_7d", "days_in_window"
     ).orderBy("day_idx")
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, du)
+    return out
 
 
 @register(
@@ -5882,7 +5843,6 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("c")
         )
-        .persist()
     )
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(b, F.col("a.d") < F.col("b.d")).selectExpr(
@@ -5925,9 +5885,7 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "floor(b0 * 100 + 0.5) / 100 AS intercept_cents",
         "floor(ols_slope * 10000 + 0.5) / 10000 AS ols_slope",
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, daily)
+    return out
 
 
 @register(
@@ -6236,7 +6194,6 @@ def orders_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rev"),
         )
         .crossJoin(F.broadcast(yr))
-        .persist()
     )
     b0 = yearly.filter(F.expr("yy = y1 - 1")).selectExpr(
         "brand", "qty AS q0", "rev AS r0"
@@ -6264,9 +6221,7 @@ def orders_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST(floor((CAST(r1 - r0 AS DOUBLE) - {vol} - {prc}) + 0.5)"
         " AS BIGINT) AS residual_cents",
     ).orderBy("brand")
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, yearly)
+    return out
 
 
 @register(
@@ -6462,13 +6417,14 @@ def events_anomaly_shesd(spark: SparkSession, sf_dir: str) -> DataFrame:
             " CAST((count(*) + 1) div 2 AS INT)) AS BIGINT)"
         ).alias("med")
     )
-    cur = (
+    resid = (
         daily.join(
             F.broadcast(dowmed), F.col("dow") == F.col("day_idx") % 7
         )
         .selectExpr("day_idx", "cents", "cents - med AS resid")
         .persist()
     )
+    cur = resid
     removed: list[tuple[int, int, int, int, float]] = []
     for k in range(1, _SHESD_ROUNDS + 1):
         s = cur.agg(
@@ -6495,6 +6451,8 @@ def events_anomaly_shesd(spark: SparkSession, sf_dir: str) -> DataFrame:
             (k, top["day_idx"], top["cents"], top["resid"], top["z"])
         )
         cur = cur.filter(F.col("day_idx") != int(top["day_idx"]))
+    daily.unpersist()
+    resid.unpersist()
     rows = [(k, d, c, r, float(z)) for k, d, c, r, z in removed]
     out = spark.createDataFrame(
         rows,
@@ -6508,9 +6466,7 @@ def events_anomaly_shesd(spark: SparkSession, sf_dir: str) -> DataFrame:
         "floor(z_raw * 10000 + 0.5) / 10000 AS z",
         "z_raw > 3e0 AS is_significant",
     ).orderBy("shesd_round")
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, daily, cur)
+    return out
 
 
 # --- r12 time-series promotions (from staging/r12 at round 12) --------
@@ -7384,7 +7340,6 @@ def orders_net_revenue_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_custkey", "y")
         .agg(F.sum("cents").cast("bigint").alias("cents"))
-        .persist()
     )
     nxt = yearly.selectExpr(
         "o_custkey AS n_cust", "y AS n_y", "cents AS n_cents"
@@ -7439,7 +7394,7 @@ def orders_net_revenue_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("base_year")
     )
-    return finalize_cached(out, yearly)
+    return out
 
 
 @register(
@@ -8676,7 +8631,6 @@ def orders_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("p_brand", "wk")
         .agg(F.sum("q").cast("bigint").alias("demand"))
-        .persist()
     )
     wr = Window.partitionBy("p_brand").orderBy("demand", "wk")
     wc = Window.partitionBy("p_brand")
@@ -8722,7 +8676,7 @@ def orders_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("p_brand")
     )
-    return finalize_cached(out, weekly)
+    return out
 
 
 # --- r12 extension wave D: KPSS level-stationarity statistic -----------------
@@ -9356,6 +9310,7 @@ def events_interval_stabbing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("min(start_s) div 3600").alias("lo"),
         F.expr("max(end_s) div 3600 + 2").alias("hi"),
     ).collect()[0]
+    iv.unpersist()
     hrs = spark.range(int(bounds["lo"]), int(bounds["hi"])).selectExpr(
         "id AS hr"
     )
@@ -9399,7 +9354,7 @@ def events_interval_stabbing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("hour_idx")
     )
-    return finalize_cached(out, iv)
+    return out
 
 
 # --- r12 extension wave E: greedy knapsack via two-level prefix sums ----------
@@ -9471,7 +9426,7 @@ def orders_greedy_knapsack(spark: SparkSession, sf_dir: str) -> DataFrame:
         "6 - CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS density",
         "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS w",
         "o_orderkey div 1024 AS bkt",
-    ).persist()
+    )
     cap = items.agg(F.expr("CAST(sum(w) div 10 AS BIGINT)").alias("c"))
     class_tot = items.groupBy("density").agg(
         F.sum("w").cast("bigint").alias("cw")
@@ -9544,7 +9499,7 @@ def orders_greedy_knapsack(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("density").desc())
     )
-    return finalize_cached(out, items)
+    return out
 
 
 # --- r12 extension wave F: maximum drawdown -----------------------------------
@@ -9633,7 +9588,6 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.expr("CAST(floor(sum(value) * 100 + 0.5) AS BIGINT)").alias("x")
         )
-        .persist()
     )
     w = (
         Window.partitionBy("event_type")
@@ -9708,7 +9662,7 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    return finalize_cached(out, daily)
+    return out
 
 
 # --- r12 extension wave F: Wilson score intervals ------------------------------
@@ -10624,7 +10578,7 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "x",
         F.row_number().over(w).cast("bigint").alias("t"),
-    ).persist()
+    )
     a = seq.selectExpr("event_type", "t AS w_start")
     b = seq.selectExpr("event_type AS et_b", "t AS tb", "x AS xb")
     windows = (
@@ -10644,7 +10598,6 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n") == _MP_W)
         .drop("n")
-        .persist()
     )
     q = windows.selectExpr(
         "event_type AS et_q", "w_start AS other_start", "vec AS vec_q"
@@ -10702,7 +10655,7 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    return finalize_cached(out, seq, windows)
+    return out
 
 
 # --- r13 growth: PACF via Durbin-Levinson ------------------------------
@@ -11878,10 +11831,6 @@ def events_forecast_backtest_mase(
                 "x"
             )
         )
-        # the three-way self-join below would otherwise re-scan and
-        # re-aggregate events once per join side (measured 7.4x at the
-        # 10x probe); the daily relation is domain-sized, so persist it
-        .persist()
     )
     b = daily.selectExpr("event_type AS et1", "d AS d1", "x AS x_lag1")
     c = daily.selectExpr("event_type AS et7", "d AS d7", "x AS x_lag7")
@@ -11933,7 +11882,7 @@ def events_forecast_backtest_mase(
         )
         .orderBy("event_type")
     )
-    return finalize_cached(out, daily)
+    return out
 
 
 # --- r13 growth: trend/seasonal strength indices ---------------------------
@@ -12057,7 +12006,7 @@ def ts_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow",
         "x * 7000 AS xu",
         "(x * 7 - sum7) * 1000 AS du",
-    ).persist()
+    )
     sdow = dtr.groupBy("event_type", "dow").agg(
         F.expr(
             "CAST(floor(avg(CAST(du AS DOUBLE)) + 0.5) AS BIGINT)"
@@ -12093,7 +12042,7 @@ def ts_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         " / CAST(n * q_tr - s_tr * s_tr AS DOUBLE))"
         " * 1000000 + 0.5) / 1000000 END AS f_trend",
     ).orderBy("event_type")
-    return finalize_cached(out, dtr)
+    return out
 
 
 # --- r13 growth: market-concentration HHI ----------------------------------
@@ -12165,7 +12114,6 @@ def orders_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("yr", "brand")
         .agg(F.sum("cents0").cast("bigint").alias("cents"))
-        .persist()
     )
     tot = rev.groupBy("yr").agg(
         F.sum("cents").cast("bigint").alias("t"),
@@ -12202,7 +12150,7 @@ def orders_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("year")
     )
-    return finalize_cached(out, rev)
+    return out
 
 
 # --- r13 growth: turning-points randomness test ----------------------------
@@ -12433,7 +12381,6 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(floor(ln(CAST(n_active AS DOUBLE) / n)"
             " * 1000000000 + 0.5) AS BIGINT) AS lnq",
         )
-        .persist()
     )
     fit = pts.groupBy().agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
@@ -12463,7 +12410,7 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("day_offset")
     )
-    return finalize_cached(out, pts)
+    return out
 
 
 # --- r13 growth: sample entropy ---------------------------------------------
@@ -12560,7 +12507,7 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "x",
         F.row_number().over(w).cast("bigint").alias("t"),
-    ).persist()
+    )
     spread = seq.groupBy("event_type").agg(
         (F.max("x") - F.min("x")).cast("bigint").alias("rng"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -12580,7 +12527,6 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left",
         )
         .selectExpr("event_type", "t", "x AS x0", "xb AS x1", "xc AS x2")
-        .persist()
     )
     q = tpl.selectExpr(
         "event_type AS eq", "t AS tq", "x0 AS q0", "x1 AS q1", "x2 AS q2"
@@ -12626,7 +12572,7 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    return finalize_cached(out, seq, tpl)
+    return out
 
 
 # --- r15 growth: dynamic time warping (unrolled exact DP) ------------------

@@ -20,8 +20,7 @@ from pyspark.sql.window import Window
 
 from cdc_pubsub_spark.functions.rounding import r4
 from cdc_pubsub_spark.registry import register
-from cdc_pubsub_spark import tables
-from cdc_pubsub_spark.tables import finalize_cached, load, release_checkpoint
+from cdc_pubsub_spark.tables import load, release_checkpoint
 
 # Deterministic 2-regular interaction graph over the event users: every
 # user u follows (7u+3) mod 1000 and (13u+11) mod 1000. Pure function of
@@ -448,15 +447,10 @@ def graph_cc_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("component_root")
     )
-    final = finalize_cached(out)
-    # Under LAZY_PLAN_MODE finalize_cached returns the LAZY aggregate,
-    # whose lineage still ends at `last`'s checkpoint blocks — releasing
-    # them would strand any later action (lineage is truncated, blocks
-    # unrecoverable; round-6 ADVICE). Only release once the result has
-    # actually been materialized by the eager checkpoint above.
-    if last is not None and not tables.LAZY_PLAN_MODE:
-        release_checkpoint(last)
-    return final
+    # The lazy result reads the last generation's checkpoint blocks, so
+    # they stay resident: releasing them would strand any later action
+    # (lineage is truncated, blocks unrecoverable).
+    return out
 
 
 _BFS_ROUNDS = 4
@@ -724,8 +718,8 @@ def _lp_round_sql(rounds: int) -> str:
 
 
 def _lp_edges_and_labels(spark: SparkSession, sf_dir: str):
-    """Shared LP machinery: the undirected hash graph (persisted, both
-    edge directions, deduped) and the converged 4-round synchronous
+    """Shared LP machinery: the undirected hash graph (both edge
+    directions, deduped) and the converged 4-round synchronous
     label assignment. Used by graph_label_propagation (community sizes)
     and graph_modularity (partition quality)."""
     users = load(spark, sf_dir, "events").select("user_id").distinct()
@@ -746,7 +740,6 @@ def _lp_edges_and_labels(spark: SparkSession, sf_dir: str):
     edges = (
         adj.unionByName(adj.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .persist()
     )
     nodes = (
         edges.select(F.col("u").alias("node"))
@@ -848,7 +841,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_members"), "community")
         .limit(20)
     )
-    return finalize_cached(out, edges)
+    return out
 
 
 @register(
@@ -921,7 +914,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     already established.
     """
     edges, lbl = _lp_edges_and_labels(spark, sf_dir)
-    lbl = lbl.persist()
     e2 = edges.filter(F.col("u") != F.col("v"))
     tm = e2.agg(F.count(F.lit(1)).cast("bigint").alias("two_m"))
     deg = e2.groupBy(F.col("u").alias("node")).agg(
@@ -977,7 +969,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_members"), "community")
         .limit(10)
     )
-    return finalize_cached(out, edges, lbl)
+    return out
 
 
 @register(
@@ -1529,7 +1521,10 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     GraphX/Pregel materializes each superstep's vertex state. Per round
     that is two vertex-keyed shuffles (the in/out neighborhood sums)
     and two 1-value collects; at 100 TB the persisted frontier is a
-    vertex-partitioned table and the collect is one number.
+    vertex-partitioned table and the collect is one number. The caches
+    serve only the loop's collects and are released before the op
+    returns: in the returned plan every max is already a literal, so
+    no round's relation is re-expanded for its max.
 
     PageRank ranks by stationary in-flow; HITS separates the two roles
     (good pointer vs good pointee). Both are certified against the same
@@ -1586,6 +1581,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         h = hraw.selectExpr(
             "user_id", f"CAST(raw * 1000000 div {hmax} AS BIGINT) AS h"
         )
+    for df in caches:
+        df.unpersist()
     out = (
         users.alias("u")
         .join(h.alias("h"), F.col("h.user_id") == F.col("u.user_id"))
@@ -1602,7 +1599,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(20)
     )
-    return finalize_cached(out, *caches)
+    return out
 
 
 # --- graph_adamic_adar: link prediction over the follow graph ------------
@@ -1740,7 +1737,6 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .persist()
     )
     und = adj.selectExpr("a AS u", "b AS w").unionByName(
         adj.selectExpr("b AS u", "a AS w")
@@ -1785,9 +1781,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("aa_micro").desc(), "u", "v")
         .limit(25)
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, adj)
+    return out
 
 
 _KATZ_ROUNDS = 4
@@ -2228,7 +2222,6 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.filter("src <> dst")
         .selectExpr("least(src, dst) AS a", "greatest(src, dst) AS b")
         .distinct()
-        .persist()
     )
     deg = (
         simple.selectExpr("a AS v")
@@ -2236,15 +2229,6 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     )
-    # r16: deg feeds THREE broadcast builds (degdist + the two edist
-    # endpoint legs); the two edist legs canonicalize to one reused
-    # broadcast, but degdist's aggregate differs, so the union+agg over
-    # the cached edge relation executed twice per invocation. The
-    # node-domain relation (~users + 256 hubs) is checkpointed once and
-    # every broadcast builds off the leaf: 2.03 -> 1.23 s min-of-4
-    # (interleaved A/B; released in the op's finally).
-    if not tables.LAZY_PLAN_MODE:
-        deg = deg.localCheckpoint(eager=True)
     ks = spark.range(0, 5).selectExpr(
         "element_at(array(2, 3, 4, 6, 10), CAST(id + 1 AS INT)) AS k"
     )
@@ -2301,12 +2285,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("k")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    try:
-        return finalize_cached(out, simple)
-    finally:
-        release_checkpoint(deg)
+    return out
 
 
 # --- r13 growth: sampled eccentricity over the follow graph --------------

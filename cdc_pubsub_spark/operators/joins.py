@@ -1262,6 +1262,8 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
         .withColumn("rnk", F.row_number().over(w))
     )
+    # Cache kept: the recall probe and the result both read `pairs`;
+    # lazy measured 0.93 s vs 0.87 s at sf0.01 and saved no job.
     return finalize_cached(out, pts, pairs)
 
 
@@ -1814,7 +1816,6 @@ def join_fuzzy_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             " i -> substring(name, i, 3))) AS g",
         )
         .distinct()
-        .persist()
     )
     sizes = grams.groupBy("name").agg(
         F.count(F.lit(1)).cast("bigint").alias("ng")
@@ -1847,6 +1848,4 @@ def join_fuzzy_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("jaccard"), "name_a", "name_b")
     )
-    from cdc_pubsub_spark.tables import finalize_cached
-
-    return finalize_cached(out, grams)
+    return out

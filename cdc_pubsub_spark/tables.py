@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,17 +19,17 @@ from pyspark.sql import types as T
 from cdc_pubsub_spark.registry import TABLES
 
 # Scan-plan memo: ``spark.read.parquet`` costs ~160 ms of py4j + footer
-# schema inference per call, and the 133-query registry issues ~220 of
-# them — ~25 s of serial driver time rebuilding IDENTICAL scan plans.
-# DataFrames are immutable logical plans, so one per (session, sf_dir,
-# table) serves every consumer. Keyed by the live session OBJECT (kept
-# strongly, so id() can't be recycled onto a new session); only the
-# driver's read-only /root/testdata trees are cached — test fixtures in
-# tmp dirs may rewrite files between reads, and a cached InMemoryFileIndex
-# would go stale.
-_DF_CACHE: dict[int, tuple[SparkSession, dict[tuple[str, str], DataFrame]]] = {}
+# schema inference per call, and the registry issues hundreds of them.
+# DataFrames are immutable logical plans, so one per (session, table file)
+# serves every consumer. Keyed by the live session OBJECT (kept strongly,
+# so id() can't be recycled onto a new session) and by the file's path,
+# mtime and size: a fixture rewritten in place misses instead of handing
+# out a plan whose file index is stale. Each session keeps its
+# _MEMO_PER_SESSION most recently used plans, so a caller that loads from
+# many short-lived dirs (one per changefeed flush) cannot grow it forever.
+_DF_CACHE: dict[int, tuple[SparkSession, OrderedDict[tuple, DataFrame]]] = {}
 _DF_LOCK = threading.Lock()
-_CACHEABLE_PREFIX = "/root/testdata/"
+_MEMO_PER_SESSION = 64
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
@@ -93,15 +94,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # timezone between queries, and this repair is the documented
     # contract. ~1 ms per call.
     ensure_session_confs(spark)
-    cacheable = os.path.abspath(sf_dir).startswith(_CACHEABLE_PREFIX)
-    if cacheable:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+        key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = None  # let the reader raise its own missing-path error
+    if key is not None:
         with _DF_LOCK:
             entry = _DF_CACHE.get(id(spark))
-            if entry is not None and entry[0] is spark:
-                df = entry[1].get((sf_dir, name))
-                if df is not None:
-                    return df
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+            if entry is not None and entry[0] is spark and key in entry[1]:
+                entry[1].move_to_end(key)
+                return entry[1][key]
+    df = spark.read.parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # TIMESTAMP(NANOS) read as long (see session.py); convert to a real
         # timestamp at microsecond precision. Integer division truncates,
@@ -110,16 +115,20 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # epoch-nanos (~1.7e18) exceed 2^53, so float math loses the low
         # bits and the truncation lands ±1 µs off DuckDB's ns→us cast.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if cacheable:
+    if key is not None:
         with _DF_LOCK:
-            if len(_DF_CACHE) >= 8:
-                # Sessions are held strongly (so id() keys stay valid),
-                # which pins their JVM-side plans — bound the cache so a
-                # host that creates/stops sessions repeatedly can't leak
-                # one session's plan state per session forever. The hot
-                # entries repopulate in one footer read each.
-                _DF_CACHE.clear()
-            _DF_CACHE.setdefault(id(spark), (spark, {}))[1][(sf_dir, name)] = df
+            entry = _DF_CACHE.get(id(spark))
+            if entry is None or entry[0] is not spark:
+                if len(_DF_CACHE) >= 8:
+                    # Sessions are held strongly (so id() keys stay
+                    # valid), which pins their JVM-side plans — bound the
+                    # sessions too, so a host that creates/stops sessions
+                    # repeatedly can't leak one session's plans forever.
+                    _DF_CACHE.clear()
+                entry = _DF_CACHE[id(spark)] = (spark, OrderedDict())
+            entry[1][key] = df
+            if len(entry[1]) > _MEMO_PER_SESSION:
+                entry[1].popitem(last=False)
     return df
 
 
@@ -151,18 +160,26 @@ def release_checkpoint(df: DataFrame, blocking: bool = False) -> None:
 def finalize_cached(result: DataFrame, *cached: DataFrame) -> DataFrame:
     """Materialize a small final result, then unpersist its cached inputs.
 
-    The multi-consumer ops (basket mining, active users, incremental
-    dedup, ...) persist() a reused intermediate and return a lazy final
-    aggregate built on it. Unpersisting before the caller materializes
-    would defeat the cache; never unpersisting leaks the blocks for the
-    session's lifetime — in the 231-op bench/suite session those
-    data-sized blocks accumulate and squeeze the executor store (round-5
-    ADVICE). localCheckpoint(eager=True) materializes the RESULT (always
-    a small aggregate here — tens to thousands of rows) and truncates
-    its lineage so the intermediates are droppable immediately; the
-    try/finally guarantees the unpersist even when materialization
-    throws. Blocking=False: block removal is async cleanup, not on the
-    query's critical path.
+    Use it only where a cache is measured to pay for its jobs:
+    - a persisted frame feeds branches that exchange reuse cannot share.
+      Spark reuses an exchange only when the whole subtree below it is
+      identical, so costly row-local work (hashing, explode) that feeds
+      several DIFFERENT shuffles runs once per branch without a cache;
+    - or an action (count, collect) reads the frame while the plan is
+      built.
+    Everywhere else an op returns its lazy plan: an identical subtree
+    inside one plan is already shared through exchange and AQE stage
+    reuse, and the persist + count + localCheckpoint here cost two or
+    more jobs that save nothing. An op whose action reads a cache, but
+    whose result does not need it, unpersists the cache after that
+    action and returns the lazy plan.
+
+    localCheckpoint(eager=True) materializes the RESULT (a small
+    aggregate) and truncates its lineage, so the cached inputs can be
+    dropped at once instead of leaking blocks for the session's
+    lifetime; the try/finally guarantees the unpersist even when
+    materialization throws. Blocking=False: block removal is async
+    cleanup, not on the query's critical path.
 
     When LAZY_PLAN_MODE is set (tests/test_plans.py), the lazy result is
     returned with its caches released immediately: plan pins must assert
